@@ -64,8 +64,8 @@ def ensure_workers_can_import(spark: SparkSession) -> None:
     import zipfile
 
     # key by applicationId, not id(sc): CPython reuses freed object
-    # addresses, so after stop/recreate cycles (bench runs ~20 sessions)
-    # a FRESH context could alias a seen id and silently skip addPyFile
+    # addresses, so after a session stop/recreate a FRESH context could
+    # alias a seen id and silently skip addPyFile
     key = spark.sparkContext.applicationId
     if key in _SHIPPED:
         return
@@ -4431,50 +4431,26 @@ def q_corpus_curate(spark, sf_dir):
 # =====================================================================
 # Driver certification-window ordering
 # =====================================================================
-# The round driver certifies (rows+schema+value-hash vs the DuckDB oracle)
-# exactly the FIRST 50 entries of queries() in iteration order
-# (VERDICT r2, verified against CORRECTNESS_r01..r04). Registration
-# order above is file-layout order; this list is the driver-facing order.
-# r5 window (VERDICT r4 next-round #1 executed):
-#   #1-#16  the r4 corpus-curation module — all 16 queries registered
-#           past the frozen r4 window and therefore never driver-run
-#           (TF-IDF/BM25, decontamination, packing + efficiency ledger,
-#           Gopher line/top-n-gram repetition, mixture report + applied
-#           sampler, paragraph dedup, DSIR, domain mix, C4 line removal,
-#           SemDeDup, overlap chunking, and the 7-stage corpus_curate
-#           composition). Certifying these closes the last correctness
-#           debt: r1∪r2∪r3∪r4∪r5 then covers all 126 registered queries.
-#   #17-#50 thirty-four previously-green sentinels — the full r4
-#           sentinel set (19: relational core, as-of, joins, stats x2,
-#           windows, text x2, dedup x3, ANN x2, multimodal x2,
-#           composites x2, splits, metrics) plus 15 widening the family
-#           coverage (FFT, audio, video, PIT/time x2, OHLC, winnowing,
-#           quarantine, quality filters, PII rewrite, skew, sessions,
-#           Gopher n-gram, embeddings, and sample_entropy — the r4
-#           drift watch-list query). Regression canaries.
-#   #51+    queries already driver-certified in r1/r2/r3/r4 (COVERAGE.md
-#           records which round certified each).
+# The driver certifies (rows + schema + value-hash vs the DuckDB oracle)
+# exactly the FIRST 50 entries of queries() in iteration order; this list
+# is that order (registration order above is file-layout order).
 QUERY_ORDER: list[str] = [
-    # -- 1-16: the r4 corpus module, never driver-run — must certify
     "tfidf_top_terms", "bm25_scores", "benchmark_contamination",
     "pack_token_stream", "line_repetition", "top_ngram_stats",
     "pack_efficiency", "source_mixture", "paragraph_dedup",
     "dsir_importance", "domain_mix", "mixture_sample", "corpus_curate",
     "c4_line_dedup", "semdedup", "chunk_overlap_spans",
-    # -- 17-35: the r4 sentinel set, kept verbatim (regression canaries)
     "tpch_pricing_summary", "asof_backward", "anchor_window_aggs",
     "hrv_features", "basic_stats", "sliding_segments", "langid",
     "quality_features", "dedup_exact", "minhash_lsh",
     "simhash_near_dups", "cosine_topk", "lsh_topk",
     "image_decode_stats", "image_psnr_roundtrip", "flagship",
     "wavelet_stats", "hash_split", "auc_scores",
-    # -- 36-50: fifteen family-coverage sentinels added r5
     "fft_features", "audio_decode_stats", "video_stats",
     "time_features", "ohlc_time_bars", "winnow_match_pairs",
     "decode_quarantine", "gopher_quality", "pii_scrub",
     "salted_skew_counts", "target_encoding_pit", "sample_entropy",
     "sessionize", "dup_ngram_fraction", "embedding_centroids",
-    # -- 51+: certified in r1/r2/r3/r4
     "fft_band_power", "dup_clusters", "audio_spectral",
     "audio_resample", "audio_transcode_snr", "video_frame_sample",
     "approx_distinct_docs", "doc_quantiles", "jsonl_roundtrip",

@@ -56,10 +56,9 @@ def entity_for(i: int, n_entities: int) -> str:
     return f"ent{(i * 1103515245 + 12345) % max(n_entities - 1, 1) + 1:08d}"
 
 
-def gen_image_row(seed: int, i: int, n_entities: int,
-                  min_side: int = 8, max_side: int = 32) -> dict:
+def gen_image_row(seed: int, i: int, n_entities: int) -> dict:
     rng = _rng(seed, i)
-    side = int(rng.integers(min_side, max_side + 1))
+    side = int(rng.integers(8, 32 + 1))  # square side, 8..32 px
     px = rng.integers(0, 256, size=(side, side, 3), dtype=np.uint8)
     fmt = _FMTS[i % len(_FMTS)]
     data = codecs.encode(px, fmt)
@@ -94,10 +93,9 @@ def gen_image_row(seed: int, i: int, n_entities: int,
     }
 
 
-def gen_images_pdf(seed: int, lo: int, hi: int, n_entities: int,
-                   min_side: int = 8, max_side: int = 32) -> pd.DataFrame:
-    rows = [gen_image_row(seed, i, n_entities, min_side, max_side)
-            for i in range(lo, hi)]
+def gen_images_pdf(seed: int, lo: int, hi: int, n_entities: int
+                   ) -> pd.DataFrame:
+    rows = [gen_image_row(seed, i, n_entities) for i in range(lo, hi)]
     pdf = pd.DataFrame(
         rows,
         columns=[
@@ -112,9 +110,7 @@ def gen_images_pdf(seed: int, lo: int, hi: int, n_entities: int,
 
 
 def images_df(spark, n: int = 1000, seed: int = 42,
-              n_entities: int | None = None,
-              min_side: int = 8, max_side: int = 32,
-              parts: int | None = None):
+              n_entities: int | None = None):
     """Distributed images table (input_hint shape + catalog columns).
 
     ``select(*INPUT_HINT_COLS)`` for the pure input_hint view; the extra
@@ -128,9 +124,9 @@ def images_df(spark, n: int = 1000, seed: int = 42,
             ids = b["id"].to_numpy()
             if len(ids):
                 yield gen_images_pdf(seed, int(ids.min()), int(ids.max()) + 1,
-                                     n_entities, min_side, max_side)
+                                     n_entities)
 
-    parts = parts or max(1, min(n // 250 or 1, 512))
+    parts = max(1, min(n // 250 or 1, 512))
     return (
         spark.range(0, n, 1, parts)
         .mapInPandas(gen, schema=IMAGES_SCHEMA + ", entity_id string, ts timestamp")

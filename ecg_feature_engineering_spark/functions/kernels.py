@@ -8,6 +8,12 @@ applyInPandas — never per-row Python UDFs (BASELINE.json input_hint).
 
 Kernel inventory:
 - ``decode_stats``       (U1/U3 analog) — decode payload, per-image pixel stats.
+- ``decode_with_status`` (U1 analog)    — the same decode with per-row
+                                          ok/error_kind quarantine.
+- ``payload_features_struct_udf`` (U1+U2) — decode, pixel stats, pHash
+                                          recompute + hamming and the
+                                          extended block in one pass (the
+                                          flagship's payload kernel).
 - ``phash_check``        (U2 analog)    — recompute pHash from bytes, compare.
 - ``psnr_roundtrip``     (payload invariant) — re-encode lossy, PSNR vs decode.
 - ``sample_entropy_agg`` (U4)           — per-entity SampEn m=1,2 UDAF with the
@@ -37,10 +43,19 @@ DECODE_STATS_FIELDS = (
 )
 
 _LUMA = np.array([0.299, 0.587, 0.114])
+_STATS_COLS = ["px_mean", "px_std", "luma_mean", "luma_std",
+               "r_mean", "g_mean", "b_mean"]
 
 
-def _decode_one(data: bytes, fmt: str) -> np.ndarray:
-    return codecs.decode(data, fmt)
+def _pixel_stats(px64: np.ndarray
+                 ) -> tuple[tuple[float, ...], tuple[int, int]]:
+    """The seven ``_STATS_COLS`` pixel stats of one decoded image, and its
+    ``(w, h)`` — the ``DECODE_STATS_FIELDS`` block that ``decode_stats``
+    and ``payload_features_struct_udf`` both emit."""
+    luma = px64 @ _LUMA
+    return ((px64.mean(), px64.std(), luma.mean(), luma.std(),
+             px64[..., 0].mean(), px64[..., 1].mean(), px64[..., 2].mean()),
+            (px64.shape[1], px64.shape[0]))
 
 
 def decode_stats(df, id_col: str = "image_id", bytes_col: str = "bytes",
@@ -66,16 +81,10 @@ def decode_stats(df, id_col: str = "image_id", bytes_col: str = "bytes",
             data_col = b[bytes_col].to_numpy()
             fmts = b[fmt_col].to_numpy()
             for i in range(n):
-                px = _decode_one(data_col[i], fmts[i]).astype(np.float64)
-                luma = px @ _LUMA
-                stats[i] = (
-                    px.mean(), px.std(), luma.mean(), luma.std(),
-                    px[..., 0].mean(), px[..., 1].mean(), px[..., 2].mean(),
-                )
-                dims[i] = (px.shape[1], px.shape[0])
+                stats[i], dims[i] = _pixel_stats(
+                    codecs.decode(data_col[i], fmts[i]).astype(np.float64))
             out = b[keep].copy()
-            out[["px_mean", "px_std", "luma_mean", "luma_std",
-                 "r_mean", "g_mean", "b_mean"]] = stats
+            out[_STATS_COLS] = stats
             out["decoded_w"] = dims[:, 0]
             out["decoded_h"] = dims[:, 1]
             yield out
@@ -143,7 +152,7 @@ def decode_with_status(df, id_col: str = "image_id",
                     kind[i] = "bad_magic"
                 else:
                     try:
-                        px = _decode_one(data, fmt).astype(np.float64)
+                        px = codecs.decode(data, fmt).astype(np.float64)
                         # structurally degenerate decodes (a crafted
                         # header declaring zero area decodes without
                         # raising) are corrupt, not ok — and the stats
@@ -231,64 +240,15 @@ def _extended_image_features(px64: np.ndarray, stored_phash: int
     return feats, ph, ham
 
 
-def image_payload_features(df, id_col: str = "image_id",
-                           bytes_col: str = "bytes", fmt_col: str = "fmt",
-                           phash_col: str = "phash",
-                           keep: list[str] | None = None):
-    """One-pass payload kernel: decode + pixel stats + pHash recompute +
-    hamming vs the stored ``phash`` column — the U1+U2 fused analog (the
-    reference filters then peak-detects in one per-record pass,
-    HRV_features.py:98-105). Fusing keeps the payload decoded exactly once
-    per row; mapInPandas over scan partitions, no shuffle."""
-    keep = keep if keep is not None else [id_col]
-    types = {f.name: f.dataType.simpleString() for f in df.schema.fields}
-    out_schema = (", ".join(f"{c} {types[c]}" for c in keep)
-                  + ", " + PAYLOAD_FEATURES_FIELDS)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            n = len(b)
-            stats = np.empty((n, 7), dtype=np.float64)
-            ext = np.empty((n, 11), dtype=np.float64)
-            dims = np.empty((n, 2), dtype=np.int32)
-            ph = np.empty(n, dtype=np.int64)
-            ham = np.empty(n, dtype=np.int32)
-            data_col = b[bytes_col].to_numpy()
-            fmts = b[fmt_col].to_numpy()
-            stored = b[phash_col].to_numpy().astype(np.int64)
-            for i in range(n):
-                px = _decode_one(data_col[i], fmts[i]).astype(np.float64)
-                luma = px @ _LUMA
-                stats[i] = (
-                    px.mean(), px.std(), luma.mean(), luma.std(),
-                    px[..., 0].mean(), px[..., 1].mean(), px[..., 2].mean(),
-                )
-                dims[i] = (px.shape[1], px.shape[0])
-                ext[i], ph[i], ham[i] = _extended_image_features(
-                    px, int(stored[i]))
-            out = b[keep].copy()
-            out[["px_mean", "px_std", "luma_mean", "luma_std",
-                 "r_mean", "g_mean", "b_mean"]] = stats
-            out["decoded_w"] = dims[:, 0]
-            out["decoded_h"] = dims[:, 1]
-            out["phash_recomputed"] = ph
-            out["phash_hamming"] = ham
-            out[["grad_x_mean", "grad_y_mean", "edge_density", "hist_entropy",
-                 "luma_p10", "luma_p50", "luma_p90", "dct_dc",
-                 "dct_low_energy", "dct_mid_energy", "dct_high_energy"]] = ext
-            yield out
-
-    return df.select(*dict.fromkeys([*keep, bytes_col, fmt_col, phash_col])) \
-        .mapInPandas(run, schema=out_schema)
-
-
 def payload_features_struct_udf():
-    """Struct-returning scalar pandas UDF over (bytes, fmt, phash) — the
-    minimal-transfer form of ``image_payload_features``: every other column
-    (caption, ids, timestamps) stays JVM-side, so the Arrow exchange
-    carries only the payload in and ~20 doubles out. Prefer this in wide
-    plans; the mapInPandas twin remains for pipelines that want to drop the
-    payload column early. Same numbers (tests assert equality)."""
+    """Struct-returning scalar pandas UDF over (bytes, fmt, phash): decode
+    + pixel stats + pHash recompute + hamming vs the stored ``phash`` +
+    the extended feature block, in one pass per row — the U1+U2 fused
+    analog (the reference filters then peak-detects in one per-record
+    pass, HRV_features.py:98-105). Every other column (caption, ids,
+    timestamps) stays JVM-side, so the Arrow exchange carries only the
+    payload in and ~20 doubles out. The flagship plan's payload kernel;
+    tests check its values against an independent numpy oracle."""
     from pyspark.sql.functions import pandas_udf
     from pyspark.sql.types import StructType
 
@@ -306,23 +266,15 @@ def payload_features_struct_udf():
         stored_np = stored.to_numpy().astype(np.int64)
         d_np, f_np = data.to_numpy(), fmts.to_numpy()
         for i in range(n):
-            px = _decode_one(d_np[i], f_np[i]).astype(np.float64)
-            luma = px @ _LUMA
-            stats[i] = (
-                px.mean(), px.std(), luma.mean(), luma.std(),
-                px[..., 0].mean(), px[..., 1].mean(), px[..., 2].mean(),
-            )
-            dims[i] = (px.shape[1], px.shape[0])
+            px = codecs.decode(d_np[i], f_np[i]).astype(np.float64)
+            stats[i], dims[i] = _pixel_stats(px)
             ext[i], ph[i], ham[i] = _extended_image_features(
                 px, int(stored_np[i]))
-        out = pd.DataFrame({
-            "px_mean": stats[:, 0], "px_std": stats[:, 1],
-            "luma_mean": stats[:, 2], "luma_std": stats[:, 3],
-            "r_mean": stats[:, 4], "g_mean": stats[:, 5],
-            "b_mean": stats[:, 6],
-            "decoded_w": dims[:, 0], "decoded_h": dims[:, 1],
-            "phash_recomputed": ph, "phash_hamming": ham,
-        })
+        out = pd.DataFrame(stats, columns=_STATS_COLS)
+        out["decoded_w"] = dims[:, 0]
+        out["decoded_h"] = dims[:, 1]
+        out["phash_recomputed"] = ph
+        out["phash_hamming"] = ham
         for j, c in enumerate(["grad_x_mean", "grad_y_mean", "edge_density",
                                "hist_entropy", "luma_p10", "luma_p50",
                                "luma_p90", "dct_dc", "dct_low_energy",
@@ -341,7 +293,7 @@ def phash_check(df, id_col: str = "image_id", bytes_col: str = "bytes",
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for b in batches:
             recomputed = np.array(
-                [codecs.phash64(_decode_one(d, f))
+                [codecs.phash64(codecs.decode(d, f))
                  for d, f in zip(b[bytes_col].to_numpy(), b[fmt_col].to_numpy())],
                 dtype=np.int64,
             )
@@ -378,7 +330,7 @@ def resize_images(df, target_side: int, id_col: str = "image_id",
         for b in batches:
             enc, fmts = [], []
             for d, f in zip(b[bytes_col].to_numpy(), b[fmt_col].to_numpy()):
-                px = _decode_one(d, f)
+                px = codecs.decode(d, f)
                 small = codecs.area_resize(px, target_side, target_side)
                 tf = out_fmt or f
                 enc.append(codecs.encode(small, tf))
@@ -404,7 +356,7 @@ def psnr_roundtrip(df, id_col: str = "image_id", bytes_col: str = "bytes",
         for b in batches:
             rows = []
             for d, f in zip(b[bytes_col].to_numpy(), b[fmt_col].to_numpy()):
-                px = _decode_one(d, f)
+                px = codecs.decode(d, f)
                 px2 = codecs.decode(codecs.encode(px, f), f)
                 p = codecs.psnr(px, px2)
                 rows.append(min(p, 999.0))
@@ -931,7 +883,7 @@ def predict_batch(df, weights: dict[str, np.ndarray] | None = None,
             data_col = b[bytes_col].to_numpy()
             fmts = b[fmt_col].to_numpy()
             for i in range(n):
-                px = _decode_one(data_col[i], fmts[i]).astype(np.float64)
+                px = codecs.decode(data_col[i], fmts[i]).astype(np.float64)
                 luma = codecs.area_resize(px, grid, grid) @ _LUMA
                 x[i] = (luma.ravel() / 255.0) - 0.5
             y = mlp_forward_np(x, w)

@@ -80,9 +80,3 @@ def warm_python_workers(spark: SparkSession, tasks_per_core: int = 2) -> None:
     n = cores * tasks_per_core
     spark.range(0, n, 1, n).mapInPandas(touch, schema="id long") \
         .write.format("noop").mode("overwrite").save()
-
-
-def stop_spark() -> None:
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        active.stop()

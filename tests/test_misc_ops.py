@@ -232,32 +232,3 @@ def test_salted_count_equals_plain(spark, sf_dir):
         .set_index("prefix")["n"].to_dict()
     assert plain == salted
     assert max(plain.values()) >= 15  # hot prefix really is hot
-
-
-def test_trimmed_min_scaling_estimator():
-    """bench._trimmed_min_eff: drops whole WORST pairs symmetrically
-    (never one arm alone), keeps >= 2 pairs, and cannot lift a
-    genuinely poor scaler (every window slow -> every pair low ->
-    trimming leaves low pairs)."""
-    import sys, os
-    sys.path.insert(0, os.path.dirname(os.path.dirname(
-        os.path.abspath(__file__))))
-    from bench import _trimmed_min_eff
-
-    # clean pairs at eff 0.85; one drift-window pair where the 4N arm
-    # ran 2x slow (pair eff 0.42) — the min estimator alone reads 0.85
-    # here, but if the CLEAN lo had landed in that pair the raw min
-    # would read low; trimming removes the contaminated pair whole
-    lo = [60.0, 61.0, 60.5, 59.0]
-    hi = [17.6, 17.9, 29.0, 17.4]
-    eff, kept = _trimmed_min_eff(lo, hi, trim=1)
-    assert kept == [0, 1, 3]
-    assert eff == round(59.0 / (4 * 17.4), 3)
-    # genuinely poor scaler: every pair ~0.5 -> trim changes nothing
-    lo2 = [60.0, 61.0, 60.5, 59.0]
-    hi2 = [30.0, 30.5, 30.2, 29.5]
-    eff2, _ = _trimmed_min_eff(lo2, hi2, trim=2)
-    assert eff2 < 0.51
-    # floor: never trims below 2 pairs
-    eff3, kept3 = _trimmed_min_eff([10.0, 11.0], [3.0, 3.1], trim=2)
-    assert len(kept3) == 2 and eff3 == round(10.0 / (4 * 3.0), 3)
