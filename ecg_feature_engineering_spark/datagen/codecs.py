@@ -258,25 +258,28 @@ def _dct_matrix(n: int) -> np.ndarray:
     return m
 
 
-_DCT32 = _dct_matrix(32)
+# rows 0-7 of the 32-point DCT-II matrix: pHash reads only the top-left
+# 8x8 block of the 2-D DCT, so only that block is computed
+_DCT32_LOW8 = _dct_matrix(32)[:8].copy()
 
 
 def gray_resize32(gray: np.ndarray) -> np.ndarray:
-    """Area-mean resize of a 2-D grayscale array to 32x32 via integral image
-    (deterministic, no interpolation library)."""
-    h, w = gray.shape
-    # area-mean resize to 32x32 via integral image, fully vectorized
+    """Area-mean resize of a 2-D grayscale array, or a stack of them on
+    leading axes, to 32x32 via integral image (deterministic, no
+    interpolation library). Each image's output is the same whether it
+    is resized alone or in a stack: cumsum and the corner arithmetic are
+    elementwise in a fixed order."""
+    h, w = gray.shape[-2:]
     ys = (np.arange(33) * h // 32).astype(int)
     xs = (np.arange(33) * w // 32).astype(int)
-    csum = np.zeros((h + 1, w + 1))
-    csum[1:, 1:] = gray.cumsum(0).cumsum(1)
-    y0, y1 = ys[:-1], np.maximum(ys[1:], ys[:-1] + 1)
+    csum = np.zeros((*gray.shape[:-2], h + 1, w + 1))
+    csum[..., 1:, 1:] = gray.cumsum(-2).cumsum(-1)
+    y0, y1 = ys[:-1, None], np.maximum(ys[1:], ys[:-1] + 1)[:, None]
     x0, x1 = xs[:-1], np.maximum(xs[1:], xs[:-1] + 1)
-    area = (y1 - y0)[:, None] * (x1 - x0)[None, :]
     return (
-        csum[np.ix_(y1, x1)] - csum[np.ix_(y0, x1)]
-        - csum[np.ix_(y1, x0)] + csum[np.ix_(y0, x0)]
-    ) / area
+        csum[..., y1, x1] - csum[..., y0, x1]
+        - csum[..., y1, x0] + csum[..., y0, x0]
+    ) / ((y1 - y0) * (x1 - x0))
 
 
 def area_resize(px: np.ndarray, out_h: int, out_w: int) -> np.ndarray:
@@ -300,23 +303,24 @@ def area_resize(px: np.ndarray, out_h: int, out_w: int) -> np.ndarray:
     return out
 
 
-def dct32(small: np.ndarray) -> np.ndarray:
-    """2-D DCT-II of a 32x32 block (orthonormal)."""
-    return _DCT32 @ small @ _DCT32.T
+def dct32_low8(small: np.ndarray) -> np.ndarray:
+    """Top-left 8x8 block of the orthonormal 2-D DCT-II of a 32x32 block,
+    or of each block of a stack on leading axes."""
+    return _DCT32_LOW8 @ small @ _DCT32_LOW8.T
 
 
-def phash_from_dct(coef8: np.ndarray) -> int:
-    """Pack the top-left 8x8 DCT block into the classic 64-bit pHash:
-    bit per coefficient > median of the AC terms."""
-    coef = coef8.flatten()
-    med = np.median(coef[1:])  # exclude DC term
-    bits = coef > med
-    val = 0
-    for b in bits:
-        val = (val << 1) | int(b)
-    if val >= 1 << 63:
-        val -= 1 << 64
-    return val
+# bit weights of the 64 pHash bits, most significant first
+_PHASH_WEIGHTS = np.left_shift(np.uint64(1),
+                               np.arange(63, -1, -1, dtype=np.uint64))
+
+
+def phash_from_dct(coef8: np.ndarray) -> np.ndarray:
+    """Pack the top-left 8x8 DCT block (or a stack of them on leading axes)
+    into the classic 64-bit pHash: bit per coefficient > median of the AC
+    terms, first coefficient in the top bit. int64 (two's complement)."""
+    coef = coef8.reshape(*coef8.shape[:-2], 64)
+    med = np.median(coef[..., 1:], axis=-1, keepdims=True)  # exclude DC
+    return ((coef > med) * _PHASH_WEIGHTS).sum(axis=-1).view(np.int64)
 
 
 def phash64(px: np.ndarray) -> int:
@@ -327,4 +331,4 @@ def phash64(px: np.ndarray) -> int:
     BASELINE.json input_hint.
     """
     gray = px.astype(np.float64) @ np.array([0.299, 0.587, 0.114])
-    return phash_from_dct(dct32(gray_resize32(gray))[:8, :8])
+    return int(phash_from_dct(dct32_low8(gray_resize32(gray))))

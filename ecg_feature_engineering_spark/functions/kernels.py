@@ -11,9 +11,10 @@ Kernel inventory:
 - ``decode_with_status`` (U1 analog)    — the same decode with per-row
                                           ok/error_kind quarantine.
 - ``payload_features_struct_udf`` (U1+U2) — decode, pixel stats, pHash
-                                          recompute + hamming and the
-                                          extended block in one pass (the
-                                          flagship's payload kernel).
+                                          recompute + hamming in one pass
+                                          (the flagship's payload kernel;
+                                          its body ``payload_features_np``
+                                          also serves ``decode_stats``).
 - ``phash_check``        (U2 analog)    — recompute pHash from bytes, compare.
 - ``psnr_roundtrip``     (payload invariant) — re-encode lossy, PSNR vs decode.
 - ``sample_entropy_agg`` (U4)           — per-entity SampEn m=1,2 UDAF with the
@@ -47,15 +48,61 @@ _STATS_COLS = ["px_mean", "px_std", "luma_mean", "luma_std",
                "r_mean", "g_mean", "b_mean"]
 
 
-def _pixel_stats(px64: np.ndarray
-                 ) -> tuple[tuple[float, ...], tuple[int, int]]:
-    """The seven ``_STATS_COLS`` pixel stats of one decoded image, and its
-    ``(w, h)`` — the ``DECODE_STATS_FIELDS`` block that ``decode_stats``
-    and ``payload_features_struct_udf`` both emit."""
-    luma = px64 @ _LUMA
-    return ((px64.mean(), px64.std(), luma.mean(), luma.std(),
-             px64[..., 0].mean(), px64[..., 1].mean(), px64[..., 2].mean()),
-            (px64.shape[1], px64.shape[0]))
+# a stack holds at most _CHUNK rows and _CHUNK_BYTES of float64 pixels,
+# so large images fall back to small stacks, down to one image at a time
+_CHUNK = 64
+_CHUNK_BYTES = 1 << 22
+# set bits per byte value, for the vectorized 64-bit hamming distance
+_POPCOUNT8 = np.array([bin(v).count("1") for v in range(256)], np.int32)
+
+
+def payload_features_np(data, fmts, stored=None) -> pd.DataFrame:
+    """The payload kernel body, runnable without Spark: decode every
+    payload and return one row per payload with the seven ``_STATS_COLS``
+    pixel stats and ``decoded_w``/``decoded_h`` (the
+    ``DECODE_STATS_FIELDS`` block); when ``stored`` pHashes are given,
+    also ``phash_recomputed`` and its ``phash_hamming`` distance to them.
+
+    Rows are decoded one by one to uint8; everything after the decode runs
+    over stacks of rows of one decoded shape (bounded by ``_CHUNK`` and
+    ``_CHUNK_BYTES``), so the numpy call count is per stack, not per
+    image. Every value is
+    bit-identical to computing it on each image alone: the reductions
+    reduce each image's contiguous block in the same order, and the luma
+    plane is taken per image on a standalone array, because a matmul over
+    a stack, or over a slice of one, rounds differently."""
+    n = len(data)
+    pxs = [codecs.decode(d, f) for d, f in zip(data, fmts)]
+    stats = np.empty((n, 7), dtype=np.float64)
+    dims = np.empty((n, 2), dtype=np.int32)
+    ph = np.empty(n, dtype=np.int64)
+    groups: dict[tuple, list[int]] = {}
+    for i, px in enumerate(pxs):
+        groups.setdefault(px.shape, []).append(i)
+    for (h, w, _), rows in groups.items():
+        dims[rows] = (w, h)
+        step = max(1, min(_CHUNK, _CHUNK_BYTES // (h * w * 3 * 8)))
+        for s in range(0, len(rows), step):
+            idx = rows[s:s + step]
+            x = np.stack([pxs[i] for i in idx]).astype(np.float64)
+            luma = np.stack([pxs[i].astype(np.float64) @ _LUMA
+                             for i in idx])
+            stats[idx] = np.column_stack([
+                x.mean(axis=(1, 2, 3)), x.std(axis=(1, 2, 3)),
+                luma.mean(axis=(1, 2)), luma.std(axis=(1, 2)),
+                *(x[..., c].mean(axis=(1, 2)) for c in range(3))])
+            if stored is not None:
+                ph[idx] = codecs.phash_from_dct(
+                    codecs.dct32_low8(codecs.gray_resize32(luma)))
+    out = pd.DataFrame(stats, columns=_STATS_COLS)
+    out["decoded_w"] = dims[:, 0]
+    out["decoded_h"] = dims[:, 1]
+    if stored is not None:
+        out["phash_recomputed"] = ph
+        diff = np.asarray(stored, dtype=np.int64) ^ ph
+        out["phash_hamming"] = _POPCOUNT8[
+            diff.view(np.uint8).reshape(n, 8)].sum(axis=1, dtype=np.int32)
+    return out
 
 
 def decode_stats(df, id_col: str = "image_id", bytes_col: str = "bytes",
@@ -75,19 +122,9 @@ def decode_stats(df, id_col: str = "image_id", bytes_col: str = "bytes",
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for b in batches:
-            n = len(b)
-            stats = np.empty((n, 7), dtype=np.float64)
-            dims = np.empty((n, 2), dtype=np.int32)
-            data_col = b[bytes_col].to_numpy()
-            fmts = b[fmt_col].to_numpy()
-            for i in range(n):
-                stats[i], dims[i] = _pixel_stats(
-                    codecs.decode(data_col[i], fmts[i]).astype(np.float64))
-            out = b[keep].copy()
-            out[_STATS_COLS] = stats
-            out["decoded_w"] = dims[:, 0]
-            out["decoded_h"] = dims[:, 1]
-            yield out
+            feats = payload_features_np(b[bytes_col].to_numpy(),
+                                        b[fmt_col].to_numpy())
+            yield pd.concat([b[keep].reset_index(drop=True), feats], axis=1)
 
     return df.select(*dict.fromkeys([*keep, bytes_col, fmt_col])) \
         .mapInPandas(run, schema=out_schema)
@@ -185,102 +222,27 @@ def decode_with_status(df, id_col: str = "image_id",
 
 
 PAYLOAD_FEATURES_FIELDS = (
-    DECODE_STATS_FIELDS
-    + ", phash_recomputed long, phash_hamming int"
-    + ", grad_x_mean double, grad_y_mean double, edge_density double"
-    + ", hist_entropy double, luma_p10 double, luma_p50 double"
-    + ", luma_p90 double, dct_dc double, dct_low_energy double"
-    + ", dct_mid_energy double, dct_high_energy double"
-)
-
-# zig-zag-ish DCT frequency bands over the 32x32 coefficient grid
-_DCT_IDX = np.add.outer(np.arange(32), np.arange(32))
-_DCT_LOW = (_DCT_IDX >= 1) & (_DCT_IDX <= 5)
-_DCT_MID = (_DCT_IDX > 5) & (_DCT_IDX <= 15)
-_DCT_HIGH = _DCT_IDX > 15
-
-
-def _extended_image_features(px64: np.ndarray, stored_phash: int
-                             ) -> tuple[np.ndarray, int, int]:
-    """Per-image feature block beyond the basic stats — the arity analog of
-    the reference's ~100-feature-per-record extraction (QRS_features.py
-    get_columns 98 cols; LONG_features ~102/lead). Derived quantities share
-    one grayscale/DCT computation (CSE in the kernel, fixing the reference's
-    recompute-per-family quirk, LONG_features.py:270-281)."""
-    luma = px64 @ _LUMA
-    # gradients + edge density on the luma plane
-    gx = np.abs(np.diff(luma, axis=1))
-    gy = np.abs(np.diff(luma, axis=0))
-    grad_x_mean = gx.mean() if gx.size else 0.0
-    grad_y_mean = gy.mean() if gy.size else 0.0
-    edge_density = (
-        float((gx > 16.0).mean()) if gx.size else 0.0)
-    # luma histogram entropy + histogram-derived percentiles (no sort)
-    hist = np.bincount(
-        np.clip(luma.astype(np.int64).ravel(), 0, 255), minlength=256)
-    p = hist / hist.sum()
-    nz = p > 0
-    hist_entropy = float(-(p[nz] * np.log(p[nz])).sum())
-    cdf = np.cumsum(hist)
-    n = cdf[-1]
-    luma_p10, luma_p50, luma_p90 = (
-        float(np.searchsorted(cdf, q * n)) for q in (0.1, 0.5, 0.9))
-    # shared 32x32 DCT: band energies + recomputed pHash from the same block
-    coef = codecs.dct32(codecs.gray_resize32(luma))
-    ph = codecs.phash_from_dct(coef[:8, :8])
-    c2 = coef * coef
-    dct_dc = float(coef[0, 0])
-    feats = np.array([
-        grad_x_mean, grad_y_mean, edge_density, hist_entropy,
-        luma_p10, luma_p50, luma_p90, dct_dc,
-        float(c2[_DCT_LOW].sum()), float(c2[_DCT_MID].sum()),
-        float(c2[_DCT_HIGH].sum()),
-    ])
-    ham = bin((int(stored_phash) ^ ph) & ((1 << 64) - 1)).count("1")
-    return feats, ph, ham
+    DECODE_STATS_FIELDS + ", phash_recomputed long, phash_hamming int")
 
 
 def payload_features_struct_udf():
     """Struct-returning scalar pandas UDF over (bytes, fmt, phash): decode
-    + pixel stats + pHash recompute + hamming vs the stored ``phash`` +
-    the extended feature block, in one pass per row — the U1+U2 fused
-    analog (the reference filters then peak-detects in one per-record
-    pass, HRV_features.py:98-105). Every other column (caption, ids,
+    + pixel stats + pHash recompute + hamming vs the stored ``phash`` in
+    one pass (``payload_features_np``) — the U1+U2 fused analog (the
+    reference filters then peak-detects in one per-record pass,
+    HRV_features.py:98-105). Every other column (caption, ids,
     timestamps) stays JVM-side, so the Arrow exchange carries only the
-    payload in and ~20 doubles out. The flagship plan's payload kernel;
-    tests check its values against an independent numpy oracle."""
+    payload in and 11 numbers out, each of them one the flagship plan
+    emits. The flagship plan's payload kernel; tests check its values
+    against a per-image numpy oracle."""
     from pyspark.sql.functions import pandas_udf
     from pyspark.sql.types import StructType
 
-    schema = StructType.fromDDL(PAYLOAD_FEATURES_FIELDS)
-
-    @pandas_udf(schema)
+    @pandas_udf(StructType.fromDDL(PAYLOAD_FEATURES_FIELDS))
     def feats(data: pd.Series, fmts: pd.Series, stored: pd.Series
               ) -> pd.DataFrame:
-        n = len(data)
-        stats = np.empty((n, 7), dtype=np.float64)
-        ext = np.empty((n, 11), dtype=np.float64)
-        dims = np.empty((n, 2), dtype=np.int32)
-        ph = np.empty(n, dtype=np.int64)
-        ham = np.empty(n, dtype=np.int32)
-        stored_np = stored.to_numpy().astype(np.int64)
-        d_np, f_np = data.to_numpy(), fmts.to_numpy()
-        for i in range(n):
-            px = codecs.decode(d_np[i], f_np[i]).astype(np.float64)
-            stats[i], dims[i] = _pixel_stats(px)
-            ext[i], ph[i], ham[i] = _extended_image_features(
-                px, int(stored_np[i]))
-        out = pd.DataFrame(stats, columns=_STATS_COLS)
-        out["decoded_w"] = dims[:, 0]
-        out["decoded_h"] = dims[:, 1]
-        out["phash_recomputed"] = ph
-        out["phash_hamming"] = ham
-        for j, c in enumerate(["grad_x_mean", "grad_y_mean", "edge_density",
-                               "hist_entropy", "luma_p10", "luma_p50",
-                               "luma_p90", "dct_dc", "dct_low_energy",
-                               "dct_mid_energy", "dct_high_energy"]):
-            out[c] = ext[:, j]
-        return out
+        return payload_features_np(data.to_numpy(), fmts.to_numpy(),
+                                   stored.to_numpy())
 
     return feats
 

@@ -136,19 +136,28 @@ def asof_join_many(
             hidden.add(rts[i])
         fill.append((rts[i], i, None, ts_type))
 
+    # every Column built here is a JVM round trip: one typed NULL per
+    # DataType, aliased per use, serves every union arm
+    nulls: dict = {}
+
+    def null(dt) -> Column:
+        if dt not in nulls:
+            nulls[dt] = F.lit(None).cast(dt)
+        return nulls[dt]
+
     u = left.select(
         *left_cols, F.lit(1).alias(_SIDE), F.lit(-1).alias(_SRC),
-        *[F.lit(None).cast(dt).alias(oc) for oc, _, _, dt in fill])
+        *[null(dt).alias(oc) for oc, _, _, dt in fill])
     for i, spec in enumerate(rights):
         r_ts = F.col(spec.get("on", on)).cast(ts_type)
         sel = [F.col(c) if c in by
                else r_ts.alias(c) if c == on
-               else F.lit(None).cast(left.schema[c].dataType).alias(c)
+               else null(left.schema[c].dataType).alias(c)
                for c in left_cols]
         sel += [F.lit(0).alias(_SIDE), F.lit(i).alias(_SRC)]
         for oc, si, rc, dt in fill:
             if si != i:
-                sel.append(F.lit(None).cast(dt).alias(oc))
+                sel.append(null(dt).alias(oc))
             else:
                 sel.append((r_ts if rc is None else F.col(rc)).alias(oc))
         u = u.unionByName(spec["df"].select(*sel))
@@ -176,17 +185,20 @@ def asof_join_many(
         *[pick(f"__pack{i}", ignorenulls=True).over(w).alias(f"__pf{i}")
           for i in range(len(rights))])
 
-    def extract(oc: str, i: int) -> Column:
+    # each source's filled struct and its gate, built once per source
+    packs, gates = [], []
+    for i in range(len(rights)):
+        pf = F.col(f"__pf{i}")
         ok = F.col(on).isNotNull()
         if tolerance is not None:
-            m = F.col(f"__pf{i}").getField(rts[i])
+            m = pf.getField(rts[i])
             gap = F.col(on) - m if direction == "backward" else m - F.col(on)
             ok = ok & (gap <= tolerance)
-        return F.when(ok, F.col(f"__pf{i}").getField(oc)).alias(oc)
-
+        packs.append(pf)
+        gates.append(ok)
     return (
         filled.where(F.col(_SIDE) == 1)
         .select(*left_cols,
-                *[extract(oc, si) for oc, si, _, _ in fill
-                  if oc not in hidden])
+                *[F.when(gates[si], packs[si].getField(oc)).alias(oc)
+                  for oc, si, _, _ in fill if oc not in hidden])
     )

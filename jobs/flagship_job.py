@@ -102,17 +102,9 @@ def main() -> None:
     # stage 3: as-of assembly onto the snapshot grid
     snapshots = datagen.snapshots_df(spark, n_entities, 12, args.seed)
 
-    def assemble():
-        from ecg_feature_engineering_spark.operators import asof
-        return asof.asof_join_many(
-            snapshots,
-            [{"df": img_feats, "on": "ts", "suffix": "_img",
-              "match_ts": "img_ts"},
-             {"df": ev_feats, "on": "ts", "suffix": "_ev",
-              "match_ts": "event_ts"}],
-            on="as_of_ts", by="entity_id")
-
-    features = cp.run("feature_vectors", assemble)
+    features = cp.run(
+        "feature_vectors",
+        lambda: fplan.assemble(img_feats, ev_feats, snapshots))
     features.write.mode("overwrite").parquet(args.output)
 
     metrics = cp.metrics()

@@ -148,6 +148,9 @@ def test_flagship_job_quarantine_e2e(spark, sf_dir, tmp_path):
         str(ckpt / "payload_screen" / "data")).count() == 0
     assert {"payload_screen", "image_features", "event_features",
             "feature_vectors"} <= {s["stage"] for s in summary["stages"]}
+    # the job and the certified lazy plan emit one feature set
+    assert spark.read.parquet(str(out)).columns == \
+        flagship(spark, sf_dir, n_images=80).columns
     # resume with a DIFFERENT --output (explicitly supported: only data
     # params hash) — every stage incl. the quarantine sink must be
     # served from the checkpoint, not recomputed or re-located

@@ -1,7 +1,7 @@
 """Independent end-to-end oracle: the flagship feature vectors recomputed
 in pure pandas/numpy (merge_asof + groupby windows — a from-scratch
-reimplementation of the DATAFLOW, sharing only the per-image numeric
-helpers), allclose at every entity x as_of_ts (north star criterion)."""
+reimplementation of the DATAFLOW, sharing only the codecs), allclose at
+every entity x as_of_ts (north star criterion)."""
 
 from __future__ import annotations
 
@@ -12,7 +12,6 @@ import pandas as pd
 
 from ecg_feature_engineering_spark.datagen import codecs
 from ecg_feature_engineering_spark.datagen import images as dg
-from ecg_feature_engineering_spark.functions import kernels
 from ecg_feature_engineering_spark.plans.flagship import flagship
 
 N_IMAGES = 240
@@ -29,7 +28,8 @@ def _images_features_pdf() -> pd.DataFrame:
     for _, r in pdf.iterrows():
         px = codecs.decode(r["bytes"], r["fmt"]).astype(np.float64)
         luma = px @ np.array([0.299, 0.587, 0.114])
-        ext, ph, ham = kernels._extended_image_features(px, int(r["phash"]))
+        ph = codecs.phash64(px)
+        ham = bin((int(r["phash"]) ^ ph) & ((1 << 64) - 1)).count("1")
         text = r["caption"]
         words = text.split() if text.strip() else []
         n_chars, n_words = len(text), len(words)

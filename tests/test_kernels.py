@@ -103,6 +103,99 @@ def test_decode_stats_matches_numpy(spark):
         assert r["decoded_w"] == px.shape[1]
 
 
+_PAYLOAD_COLS = ["px_mean", "px_std", "luma_mean", "luma_std", "r_mean",
+                 "g_mean", "b_mean", "decoded_w", "decoded_h",
+                 "phash_recomputed", "phash_hamming"]
+
+
+def _payload_corpus() -> pd.DataFrame:
+    """Every (fmt, h, w) group of a shape grid (three rows each), one shape
+    group of more than ``kernels._CHUNK`` rows, one singleton shape and
+    one shape too large for a stack of two under ``kernels._CHUNK_BYTES``,
+    in shuffled order; stored pHashes alternate between exact and random
+    so hamming distances are both zero and not."""
+    rng = np.random.default_rng(17)
+    fmts = ("bmp", "png", "jpeg")
+    items = [(f, hw) for f in fmts
+             for hw in ((8, 8), (12, 20), (31, 17), (32, 32))
+             for _ in range(3)]
+    items += [(fmts[i % 3], (16, 16)) for i in range(kernels._CHUNK + 6)]
+    items += [("png", (5, 9)), ("bmp", (300, 300)), ("jpeg", (300, 300))]
+    rows = []
+    for i in rng.permutation(len(items)):
+        fmt, (h, w) = items[i]
+        data = codecs.encode(rng.integers(0, 256, (h, w, 3), np.uint8), fmt)
+        exact = codecs.phash64(codecs.decode(data, fmt))
+        rows.append({"image_id": f"img{i:03d}", "bytes": data, "fmt": fmt,
+                     "phash": exact if i % 2 else int(
+                         rng.integers(-2**63, 2**63 - 1))})
+    return pd.DataFrame(rows).sort_values("image_id", ignore_index=True)
+
+
+def _payload_oracle(pdf: pd.DataFrame) -> pd.DataFrame:
+    """Per image, alone: decode -> float64 -> stats, ``codecs.phash64``,
+    hamming by counting the bits of the 64-bit xor."""
+    out = []
+    for d, f, stored in zip(pdf["bytes"], pdf["fmt"], pdf["phash"]):
+        u8 = codecs.decode(d, f)
+        px = u8.astype(np.float64)
+        luma = px @ _LUMA
+        ph = codecs.phash64(u8)
+        out.append([px.mean(), px.std(), luma.mean(), luma.std(),
+                    px[..., 0].mean(), px[..., 1].mean(), px[..., 2].mean(),
+                    px.shape[1], px.shape[0], ph,
+                    bin((int(stored) ^ ph) & ((1 << 64) - 1)).count("1")])
+    return pd.DataFrame(out, columns=_PAYLOAD_COLS)
+
+
+def _assert_payload_equal(got: pd.DataFrame, want: pd.DataFrame) -> None:
+    for c in want.columns:
+        assert np.array_equal(got[c].to_numpy(), want[c].to_numpy()), c
+
+
+def test_payload_kernel_body_matches_per_image_oracle():
+    """The shape-batched kernel body, without Spark, is bit-identical to
+    computing every value on each image alone."""
+    pdf = _payload_corpus()
+    shapes = pd.Series([codecs.decode(d, f).shape
+                        for d, f in zip(pdf["bytes"], pdf["fmt"])])
+    assert shapes.value_counts().max() > kernels._CHUNK
+    assert shapes.value_counts().min() == 1
+    assert 300 * 300 * 3 * 8 * 2 > kernels._CHUNK_BYTES
+    got = kernels.payload_features_np(pdf["bytes"], pdf["fmt"],
+                                      pdf["phash"])
+    assert list(got.columns) == _PAYLOAD_COLS
+    want = _payload_oracle(pdf)
+    assert (want["phash_hamming"] == 0).any()
+    assert (want["phash_hamming"] > 0).any()
+    _assert_payload_equal(got, want)
+    stats_only = kernels.payload_features_np(pdf["bytes"], pdf["fmt"])
+    _assert_payload_equal(stats_only, want[_PAYLOAD_COLS[:9]])
+
+
+def test_payload_kernel_in_spark_small_arrow_batches(spark):
+    """The same corpus through the struct UDF and ``decode_stats`` with
+    7-row Arrow batches: still bit-identical to the per-image oracle."""
+    pdf = _payload_corpus()
+    want = _payload_oracle(pdf)
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "7")
+    try:
+        df = spark.createDataFrame(pdf).repartition(3)
+        udf = kernels.payload_features_struct_udf()
+        got = (df.select("image_id", udf("bytes", "fmt", "phash").alias("f"))
+               .select("image_id", "f.*").toPandas()
+               .sort_values("image_id", ignore_index=True))
+        stats = (kernels.decode_stats(df).toPandas()
+                 .sort_values("image_id", ignore_index=True))
+    finally:
+        spark.conf.set(key, old)
+    assert got["image_id"].tolist() == pdf["image_id"].tolist()
+    _assert_payload_equal(got, want)
+    _assert_payload_equal(stats, want[_PAYLOAD_COLS[:9]])
+
+
 def test_phash_integrity(spark):
     """Stored phash (hot-prefix rows excluded) must equal the recomputed one."""
     img = datagen.images_df(spark, 120, seed=42)
