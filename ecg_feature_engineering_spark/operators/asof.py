@@ -28,8 +28,9 @@ workload has shown that straggler.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, DataType, MapType, StructType
 
 _SIDE = "__asof_is_left"
 _SRC = "__src"
@@ -136,69 +137,88 @@ def asof_join_many(
             hidden.add(rts[i])
         fill.append((rts[i], i, None, ts_type))
 
-    # every Column built here is a JVM round trip: one typed NULL per
-    # DataType, aliased per use, serves every union arm
-    nulls: dict = {}
+    # each step is one selectExpr of SQL text: a Column built through the
+    # API costs py4j round trips (three for an F.col, one per alias), and
+    # with a few hundred of them building the plan was mostly waiting on
+    # the gateway. The text parses to the expressions the Column API built.
+    def null(dt) -> str:
+        return f"CAST(NULL AS {_sql_type(dt)})"
 
-    def null(dt) -> Column:
-        if dt not in nulls:
-            nulls[dt] = F.lit(None).cast(dt)
-        return nulls[dt]
-
-    u = left.select(
-        *left_cols, F.lit(1).alias(_SIDE), F.lit(-1).alias(_SRC),
-        *[null(dt).alias(oc) for oc, _, _, dt in fill])
+    u = left.selectExpr(
+        *map(_q, left_cols), f"1 AS {_SIDE}", f"-1 AS {_SRC}",
+        *[f"{null(dt)} AS {_q(oc)}" for oc, _, _, dt in fill])
     for i, spec in enumerate(rights):
-        r_ts = F.col(spec.get("on", on)).cast(ts_type)
-        sel = [F.col(c) if c in by
-               else r_ts.alias(c) if c == on
-               else null(left.schema[c].dataType).alias(c)
+        r_ts = f"CAST({_q(spec.get('on', on))} AS {_sql_type(ts_type)})"
+        sel = [_q(c) if c in by
+               else f"{r_ts} AS {_q(c)}" if c == on
+               else f"{null(left.schema[c].dataType)} AS {_q(c)}"
                for c in left_cols]
-        sel += [F.lit(0).alias(_SIDE), F.lit(i).alias(_SRC)]
+        sel += [f"0 AS {_SIDE}", f"{i} AS {_SRC}"]
         for oc, si, rc, dt in fill:
-            if si != i:
-                sel.append(null(dt).alias(oc))
-            else:
-                sel.append((r_ts if rc is None else F.col(rc)).alias(oc))
-        u = u.unionByName(spec["df"].select(*sel))
+            val = null(dt) if si != i else r_ts if rc is None else _q(rc)
+            sel.append(f"{val} AS {_q(oc)}")
+        u = u.unionByName(spec["df"].selectExpr(*sel))
 
-    for i in range(len(rights)):
-        u = u.withColumn(
-            f"__pack{i}",
-            F.when((F.col(_SRC) == i) & F.col(on).isNotNull(),
-                   F.struct(*[F.col(oc).alias(oc)
-                              for oc, si, _, _ in fill if si == i])))
+    def pack(i: int) -> str:
+        fields = ", ".join(_q(oc) for oc, si, _, _ in fill if si == i)
+        return (f"CASE WHEN {_SRC} = {i} AND {_q(on)} IS NOT NULL "
+                f"THEN struct({fields}) END AS __pack{i}")
 
-    w = Window.partitionBy(*by)
+    u = u.selectExpr("*", *map(pack, range(len(rights))))
+
     if direction == "backward":
         # right rows sort BEFORE probe rows at equal ts -> inclusive <=
-        w = (w.orderBy(F.col(on).asc(), F.col(_SIDE).asc())
-             .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-        pick = F.last
+        pick, side = "last", "ASC"
+        frame = "UNBOUNDED PRECEDING AND CURRENT ROW"
     else:
         # probe rows sort BEFORE right rows at equal ts -> inclusive >=
-        w = (w.orderBy(F.col(on).asc(), F.col(_SIDE).desc())
-             .rowsBetween(Window.currentRow, Window.unboundedFollowing))
-        pick = F.first
-    filled = u.select(
-        *left_cols, F.col(_SIDE),
-        *[pick(f"__pack{i}", ignorenulls=True).over(w).alias(f"__pf{i}")
+        pick, side = "first", "DESC"
+        frame = "CURRENT ROW AND UNBOUNDED FOLLOWING"
+    w = (f"PARTITION BY {', '.join(map(_q, by))} "
+         f"ORDER BY {_q(on)} ASC, {_SIDE} {side} ROWS BETWEEN {frame}")
+    filled = u.selectExpr(
+        *map(_q, left_cols), _SIDE,
+        *[f"{pick}(__pack{i}, true) OVER ({w}) AS __pf{i}"
           for i in range(len(rights))])
 
-    # each source's filled struct and its gate, built once per source
-    packs, gates = [], []
-    for i in range(len(rights)):
-        pf = F.col(f"__pf{i}")
-        ok = F.col(on).isNotNull()
-        if tolerance is not None:
-            m = pf.getField(rts[i])
+    # each source's gate: a probe with a ts, and with ``tolerance`` a
+    # matched ts close enough to it
+    gates = [f"{_q(on)} IS NOT NULL"] * len(rights)
+    if tolerance is not None:
+        oks = {}
+        for i in range(len(rights)):
+            m = F.col(f"__pf{i}").getField(rts[i])
             gap = F.col(on) - m if direction == "backward" else m - F.col(on)
-            ok = ok & (gap <= tolerance)
-        packs.append(pf)
-        gates.append(ok)
+            oks[f"__ok{i}"] = F.col(on).isNotNull() & (gap <= tolerance)
+        filled = filled.withColumns(oks)
+        gates = list(oks)
     return (
-        filled.where(F.col(_SIDE) == 1)
-        .select(*left_cols,
-                *[F.when(gates[si], packs[si].getField(oc)).alias(oc)
-                  for oc, si, _, _ in fill if oc not in hidden])
+        filled.where(f"{_SIDE} = 1")
+        .selectExpr(*map(_q, left_cols),
+                    *[f"CASE WHEN {gates[si]} THEN __pf{si}[{_lit(oc)}] END "
+                      f"AS {_q(oc)}"
+                      for oc, si, _, _ in fill if oc not in hidden])
     )
+
+
+def _q(name: str) -> str:
+    """``name`` as a quoted SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _sql_type(dt: DataType) -> str:
+    """``dt`` in SQL type syntax, struct field names quoted."""
+    if isinstance(dt, StructType):
+        return "STRUCT<" + ", ".join(
+            f"{_q(f.name)}: {_sql_type(f.dataType)}" for f in dt) + ">"
+    if isinstance(dt, ArrayType):
+        return f"ARRAY<{_sql_type(dt.elementType)}>"
+    if isinstance(dt, MapType):
+        return (f"MAP<{_sql_type(dt.keyType)}, "
+                f"{_sql_type(dt.valueType)}>")
+    return dt.simpleString()
+
+
+def _lit(s: str) -> str:
+    """``s`` as a SQL string literal."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"

@@ -131,14 +131,16 @@ def assemble(img_feats: DataFrame, ev_feats: DataFrame,
     # still present here rides the as-of shuffle+sort — the biggest
     # exchange in the plan. image_features carries a few columns this
     # plan does not emit (the stored phash, the caption's n_chars_q,
-    # upper_ratio and digit_ratio); they are dropped here.
-    img_feats = img_feats.select(
+    # upper_ratio and digit_ratio); they are dropped here. selectExpr
+    # sends each name as text, where select would build a Column per name
+    # over py4j (three round trips each).
+    img_feats = img_feats.selectExpr(
         "entity_id", "ts", "image_id",
         "px_mean", "px_std", "luma_mean", "luma_std",
         "r_mean", "g_mean", "b_mean", "decoded_w", "decoded_h",
         "phash_recomputed", "phash_hamming", "phash_bits", "phash_prefix",
         "n_words", "mean_word_len", "punct_ratio", "stopword_ratio")
-    ev_feats = ev_feats.select(
+    ev_feats = ev_feats.selectExpr(
         "entity_id", "ts", "value", "value_diff1", "value_diff2",
         "roll_mean", "roll_min", "roll_max", "roll_std", "roll_n",
         "session_id", "session_event_n")
@@ -155,7 +157,7 @@ def assemble(img_feats: DataFrame, ev_feats: DataFrame,
         ],
         on="as_of_ts", by="entity_id",
     )
-    return with_all.select(
+    return with_all.selectExpr(
         "entity_id", "as_of_ts",
         # image payload features (latest image at or before as_of)
         "image_id", "img_ts", "px_mean", "px_std", "luma_mean", "luma_std",

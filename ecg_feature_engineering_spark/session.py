@@ -53,6 +53,12 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("ENGINE_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # call-site capture for error contexts costs ~6 py4j round trips
+        # per DataFrame/Column API call (over a third of the gateway
+        # commands that building the flagship plan sends); plan building
+        # is serial and latency-bound, so those round trips set both its
+        # time and how much it swings on a busy host
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     if extra_conf:
         for k, v in extra_conf.items():

@@ -3,6 +3,8 @@ direction, output naming. (SURVEY.md J5 — the engine centerpiece.)"""
 
 from __future__ import annotations
 
+import datetime
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -222,3 +224,29 @@ def test_asof_output_names_suffix_until_free(spark):
                            "v_a"]
     row = out.collect()[0]
     assert (row["v_a_a"], row["v_a_a_a"], row["v_a"]) == (2.0, 3.0, ts)
+
+
+def test_asof_names_and_types_that_need_quoting(spark):
+    """The as-of plan is built from SQL text, so every name and type in it
+    is spelled out: names with a space, a dot, a backtick or a quote, and
+    struct, array and map payloads (the struct with such field names),
+    come through as they are, matched and unmatched."""
+    ts = datetime.datetime(2024, 1, 1)
+    left = spark.createDataFrame(
+        [("e", ts, 1), ("f", ts, 2)],
+        "entity_id string, ts timestamp, `l v` int")
+    right = spark.createDataFrame(
+        [("e", ts, 2.0, ("x", 3), [4], {"k": 5})],
+        "entity_id string, ts timestamp, `a.b` double, "
+        "`s t` struct<`f g`: string, `h'i`: int>, `c``d` array<int>, "
+        "m map<string, int>")
+    out = asof.asof_join(left, right, by="entity_id", keep_match_ts="it's")
+    assert out.columns == ["entity_id", "ts", "l v", "a.b", "s t", "c`d",
+                           "m", "it's"]
+    assert out.schema["s t"].dataType == right.schema["s t"].dataType
+    e, f = sorted(out.collect(), key=lambda r: r["entity_id"])
+    assert (e["l v"], e["a.b"], e["s t"]["f g"], e["s t"]["h'i"],
+            e["c`d"], e["m"], e["it's"]) == (1, 2.0, "x", 3, [4], {"k": 5},
+                                             ts)
+    assert f["l v"] == 2
+    assert all(f[c] is None for c in ("a.b", "s t", "c`d", "m", "it's"))

@@ -165,3 +165,33 @@ def test_flagship_job_quarantine_e2e(spark, sf_dir, tmp_path):
     s2 = json.loads(r2.stdout.strip().splitlines()[-1])
     assert s2["quarantined_rows"] == 0
     assert s2["output_rows"] == summary["output_rows"]
+
+
+def test_feature_plan_build_round_trips_bounded(spark, sf_dir, monkeypatch):
+    """Building the flagship plan is a serial chain of py4j round trips on
+    the driver, and every perfbench pass builds it again, so their count
+    sets the build's time and how much it swings on a busy host (6846 per
+    build before the as-of projections were sent as SQL text and
+    PySpark's call-site capture was turned off). Memory-release commands,
+    sent as Python proxies are collected, depend on GC timing and are not
+    counted."""
+    from py4j.clientserver import ClientServerConnection
+
+    from ecg_feature_engineering_spark.datagen import images as datagen
+    from ecg_feature_engineering_spark.plans.flagship import feature_plan
+
+    images = datagen.images_df(spark, 200, 42, 10)
+    snapshots = datagen.snapshots_df(spark, 10, 12, 42)
+    events = spark.read.parquet(f"{sf_dir}/events.parquet")
+    sent = []
+    send = ClientServerConnection.send_command
+
+    def counted(self, command, *args, **kwargs):
+        sent.append(command)
+        return send(self, command, *args, **kwargs)
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", counted)
+    feature_plan(images, snapshots, events, 10)
+    monkeypatch.undo()
+    n = sum(not c.startswith("m\n") for c in sent)
+    assert 0 < n < 1200, n
