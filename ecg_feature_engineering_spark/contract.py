@@ -49,6 +49,20 @@ BIN_THRESHOLDS = [150.0, 100.0, 50.0]
 
 
 _SHIPPED: set[str] = set()
+_PKG_DIR = os.path.dirname(os.path.abspath(__file__))
+
+
+def worker_zip_path(pkg_dir: str = _PKG_DIR) -> str:
+    """Where ``ensure_workers_can_import`` builds the zip of ``pkg_dir``:
+    in the temp dir, under a name keyed on a short hash of the package
+    path, so two checkouts sharing one temp dir never ship each other's
+    code to executors."""
+    import hashlib
+    import tempfile
+
+    tag = hashlib.sha256(os.path.abspath(pkg_dir).encode()).hexdigest()[:12]
+    return os.path.join(tempfile.gettempdir(),
+                        f"ecg_feature_engineering_spark_pyfiles_{tag}.zip")
 
 
 def ensure_workers_can_import(spark: SparkSession) -> None:
@@ -60,7 +74,6 @@ def ensure_workers_can_import(spark: SparkSession) -> None:
     name). Building a zip once and addPyFile-ing it makes every
     kernel-bearing query self-contained — the same mechanism as the
     production ``spark-submit --py-files dist/engine.zip``."""
-    import tempfile
     import zipfile
 
     # key by applicationId, not id(sc): CPython reuses freed object
@@ -69,13 +82,11 @@ def ensure_workers_can_import(spark: SparkSession) -> None:
     key = spark.sparkContext.applicationId
     if key in _SHIPPED:
         return
-    pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    zpath = os.path.join(tempfile.gettempdir(),
-                         "ecg_feature_engineering_spark_pyfiles.zip")
+    zpath = worker_zip_path()
     # Rebuild when any source file is newer than the zip — a stale cached
     # zip would make executors silently run old kernel code after an edit.
     src_mtime = 0.0
-    for root, _dirs, files in os.walk(pkg_dir):
+    for root, _dirs, files in os.walk(_PKG_DIR):
         if "__pycache__" in root:
             continue
         for f in files:
@@ -89,7 +100,7 @@ def ensure_workers_can_import(spark: SparkSession) -> None:
         # would interleave writes and ship a corrupt archive to executors)
         tmp = f"{zpath}.tmp.{os.getpid()}"
         with zipfile.ZipFile(tmp, "w", zipfile.ZIP_DEFLATED) as zf:
-            for root, _dirs, files in os.walk(pkg_dir):
+            for root, _dirs, files in os.walk(_PKG_DIR):
                 if "__pycache__" in root:
                     continue
                 for f in files:
@@ -97,7 +108,7 @@ def ensure_workers_can_import(spark: SparkSession) -> None:
                         full = os.path.join(root, f)
                         rel = os.path.join(
                             "ecg_feature_engineering_spark",
-                            os.path.relpath(full, pkg_dir))
+                            os.path.relpath(full, _PKG_DIR))
                         zf.write(full, rel)
         os.replace(tmp, zpath)
     spark.sparkContext.addPyFile(zpath)
@@ -1428,7 +1439,7 @@ def q_decode_quarantine(spark, sf_dir):
     corpus with 30% of payloads deliberately corrupted IN-PLAN (pure JVM
     binary expressions — truncate to half / clobber the magic / NULL out,
     keyed on the image index so the damage is deterministic), then
-    ``decode_with_status`` classifies every row instead of aborting the
+    ``decode_stats`` classifies every row instead of aborting the
     stage. Digest: (fmt, error_kind) counts — 56 ok + 8 of each failure
     kind per format — plus min/max px_mean over the surviving rows
     (pinned golden constants, the image_decode_stats pattern)."""
@@ -1445,7 +1456,7 @@ def q_decode_quarantine(spark, sf_dir):
                                                   F.lit(3), blen)))
          .when(idx % 10 == 9, F.lit(None).cast("binary"))
          .otherwise(F.col("bytes")))
-    out = kernels.decode_with_status(corrupted, keep=["image_id", "fmt"])
+    out = kernels.decode_stats(corrupted, keep=["image_id", "fmt"])
     out = _round(out, ["px_mean"])
     return out.groupBy("fmt", "error_kind").agg(
         F.count(F.lit(1)).alias("n"),
@@ -1729,17 +1740,19 @@ def q_phash_check(spark, sf_dir):
     for every row EXCEPT the datagen's deliberately hot-prefix-forced skew
     rows (prefix 0x7FEE, gen_image_row) whose stored hash is intentionally
     rewritten. Digest per format: n, n_hot, and n_hamming0 among non-hot
-    rows (invariant: n_hamming0 == n - n_hot; pinned golden constants)."""
-    img = _images(spark)
-    out = kernels.phash_check(img)
-    j = out.join(img.select("image_id", "fmt"), "image_id")
-    hot = (F.shiftrightunsigned(F.col("phash_stored"), 48)
+    rows (invariant: n_hamming0 == n - n_hot; pinned golden constants).
+    The recomputed hash and its hamming distance come from the flagship's
+    payload kernel, ``payload_features_struct_udf``."""
+    feats = kernels.payload_features_struct_udf()
+    out = _images(spark).select(
+        "fmt", "phash", feats("bytes", "fmt", "phash").alias("pf"))
+    hot = (F.shiftrightunsigned(F.col("phash"), 48)
            .bitwiseAND(F.lit(0xFFFF)) == 0x7FEE)
-    return j.groupBy("fmt").agg(
+    return out.groupBy("fmt").agg(
         F.count(F.lit(1)).alias("n"),
         F.sum(hot.cast("int")).alias("n_hot"),
-        F.sum(F.when(~hot & (F.col("hamming") == 0), 1).otherwise(0))
-        .alias("n_hamming0"))
+        F.sum(F.when(~hot & (F.col("pf.phash_hamming") == 0), 1)
+              .otherwise(0)).alias("n_hamming0"))
 
 
 @register("image_psnr_roundtrip", """

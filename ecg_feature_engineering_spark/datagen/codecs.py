@@ -13,8 +13,7 @@ has no PIL/libjpeg, so:
   *bitstream* (zlib stands in for the Huffman entropy layer — no libjpeg
   in this container), but the loss characteristics are genuine: measured
   PSNR ≈ 42 dB at quality 95 on worst-case noise images (the ≥ 40 dB
-  input_hint invariant), higher on natural content. Decode dispatches on
-  magic bytes so legacy v0 (uniform-quantization) payloads still decode.
+  input_hint invariant), higher on natural content.
 
 All functions are row-scalar (ndarray <-> bytes) and are only ever called from
 inside vectorized pandas/Arrow kernels — never as per-row Python UDFs.
@@ -29,8 +28,6 @@ import numpy as np
 
 FMT_LOSSLESS = frozenset({"png", "bmp"})
 FMT_LOSSY = frozenset({"jpeg"})
-_FAKE_JPEG_MAGIC = b"FJPG"
-_FAKE_JPEG_QSTEP = 2  # uniform quantization step -> worst-case PSNR ~48 dB
 
 
 # ---------------------------------------------------------------- BMP (24-bit)
@@ -120,26 +117,6 @@ def decode_png(data: bytes) -> np.ndarray:
     return px.astype(np.uint8)
 
 
-# ------------------------------------------------------- fake lossy ("jpeg")
-def encode_fake_jpeg(px: np.ndarray) -> bytes:
-    """Deterministic lossy stand-in: quantize to step 2, zlib the plane.
-    (Legacy v0 codec — kept so previously staged corpora still decode.)"""
-    h, w, _ = px.shape
-    q = (px.astype(np.uint16) // _FAKE_JPEG_QSTEP).astype(np.uint8)
-    return (
-        _FAKE_JPEG_MAGIC
-        + struct.pack("<HHB", w, h, _FAKE_JPEG_QSTEP)
-        + zlib.compress(q.tobytes(), 6)
-    )
-
-
-def decode_fake_jpeg(data: bytes) -> np.ndarray:
-    assert data[:4] == _FAKE_JPEG_MAGIC, "not an engine fake-jpeg payload"
-    w, h, step = struct.unpack_from("<HHB", data, 4)
-    q = np.frombuffer(zlib.decompress(data[9:]), dtype=np.uint8).reshape(h, w, 3)
-    return np.minimum(q.astype(np.uint16) * step + step // 2, 255).astype(np.uint8)
-
-
 # -------------------------------------------- DCT-quantization lossy codec
 # A genuine lossy *transform codec* (JPEG's core math: 8x8 block DCT-II +
 # quality-scaled quantization with the public JPEG luminance table), minus
@@ -220,17 +197,9 @@ def decode_dctq(data: bytes) -> np.ndarray:
     return out
 
 
-def decode_lossy(data: bytes) -> np.ndarray:
-    """fmt="jpeg" dispatch by magic: DCTQ (current) or FJPG (legacy)."""
-    head = bytes(data[:4])
-    if head == _DCTQ_MAGIC:
-        return decode_dctq(data)
-    return decode_fake_jpeg(data)
-
-
 # ---------------------------------------------------------------- dispatch
 _ENCODERS = {"bmp": encode_bmp, "png": encode_png, "jpeg": encode_dctq}
-_DECODERS = {"bmp": decode_bmp, "png": decode_png, "jpeg": decode_lossy}
+_DECODERS = {"bmp": decode_bmp, "png": decode_png, "jpeg": decode_dctq}
 
 
 def encode(px: np.ndarray, fmt: str) -> bytes:

@@ -7,15 +7,15 @@ typed feature columns out, always Arrow-batched pandas UDFs / mapInPandas /
 applyInPandas — never per-row Python UDFs (BASELINE.json input_hint).
 
 Kernel inventory:
-- ``decode_stats``       (U1/U3 analog) — decode payload, per-image pixel stats.
-- ``decode_with_status`` (U1 analog)    — the same decode with per-row
-                                          ok/error_kind quarantine.
-- ``payload_features_struct_udf`` (U1+U2) — decode, pixel stats, pHash
-                                          recompute + hamming in one pass
-                                          (the flagship's payload kernel;
-                                          its body ``payload_features_np``
-                                          also serves ``decode_stats``).
-- ``phash_check``        (U2 analog)    — recompute pHash from bytes, compare.
+- ``payload_features_np`` (U1+U2)       — the one image decode loop: per-row
+                                          ok/error_kind quarantine, pixel
+                                          stats and, given stored hashes,
+                                          pHash recompute + hamming, over
+                                          same-shape stacks. Two wrappers:
+- ``decode_stats``       (U1/U3 analog) — mapInPandas: status + pixel stats.
+- ``payload_features_struct_udf`` (U1+U2) — struct pandas UDF: status, stats,
+                                          pHash + hamming (the flagship's
+                                          payload kernel).
 - ``psnr_roundtrip``     (payload invariant) — re-encode lossy, PSNR vs decode.
 - ``sample_entropy_agg`` (U4)           — per-entity SampEn m=1,2 UDAF with the
                                           reference's NaN->-2 / Inf->-1 patch.
@@ -39,6 +39,7 @@ from pyspark.sql import functions as F
 from ecg_feature_engineering_spark.datagen import codecs
 
 DECODE_STATS_FIELDS = (
+    "ok boolean, error_kind string, "
     "px_mean double, px_std double, luma_mean double, luma_std double, "
     "r_mean double, g_mean double, b_mean double, decoded_w int, decoded_h int"
 )
@@ -47,6 +48,9 @@ _LUMA = np.array([0.299, 0.587, 0.114])
 _STATS_COLS = ["px_mean", "px_std", "luma_mean", "luma_std",
                "r_mean", "g_mean", "b_mean"]
 
+# First bytes of each supported format's payload (datagen/codecs.py): a
+# payload without them is classified 'bad_magic' without a decode attempt
+_MAGICS = {"bmp": b"BM", "png": b"\x89PNG", "jpeg": b"DCTQ"}
 
 # a stack holds at most _CHUNK rows and _CHUNK_BYTES of float64 pixels,
 # so large images fall back to small stacks, down to one image at a time.
@@ -59,15 +63,41 @@ _CHUNK_BYTES = 3 << 17
 _POPCOUNT8 = np.array([bin(v).count("1") for v in range(256)], np.int32)
 
 
+def _decode_checked(data, fmt) -> tuple[np.ndarray | None, str]:
+    """One payload's uint8 pixels and ``error_kind``: 'ok', or why there
+    are no pixels — 'null_payload' (NULL or empty bytes),
+    'unsupported_fmt', 'bad_magic' (signature mismatch, no decode
+    attempted) or 'corrupt' (the decode raised, or its shape is
+    degenerate: a crafted header declaring zero area decodes without
+    raising)."""
+    if data is None or len(data) == 0:
+        return None, "null_payload"
+    magic = _MAGICS.get(fmt)
+    if magic is None:
+        return None, "unsupported_fmt"
+    if bytes(data[:len(magic)]) != magic:
+        return None, "bad_magic"
+    try:
+        px = codecs.decode(data, fmt)
+    except Exception:
+        return None, "corrupt"
+    if px.ndim != 3 or px.size == 0:
+        return None, "corrupt"
+    return px, "ok"
+
+
 def payload_features_np(data, fmts, stored=None) -> pd.DataFrame:
-    """The payload kernel body, runnable without Spark: decode every
-    payload and return one row per payload with the seven ``_STATS_COLS``
-    pixel stats and ``decoded_w``/``decoded_h`` (the
-    ``DECODE_STATS_FIELDS`` block); when ``stored`` pHashes are given,
-    also ``phash_recomputed`` and its ``phash_hamming`` distance to them.
+    """The payload kernel body, runnable without Spark: classify and decode
+    every payload (``_decode_checked``) and return one row per payload
+    with ``ok``/``error_kind``, the seven ``_STATS_COLS`` pixel stats and
+    ``decoded_w``/``decoded_h`` (the ``DECODE_STATS_FIELDS`` block); when
+    ``stored`` pHashes are given, also ``phash_recomputed`` and its
+    ``phash_hamming`` distance to them. Every value of a row that is not
+    ok is missing (NaN, or NA in nullable integer columns), which Arrow
+    sends to Spark as NULL.
 
     Rows are decoded one by one to uint8; everything after the decode runs
-    over stacks of rows of one decoded shape (bounded by ``_CHUNK`` and
+    over stacks of ok rows of one decoded shape (bounded by ``_CHUNK`` and
     ``_CHUNK_BYTES``), so the numpy call count is per stack, not per
     image. Every value is
     bit-identical to computing it on each image alone: the reductions
@@ -75,13 +105,16 @@ def payload_features_np(data, fmts, stored=None) -> pd.DataFrame:
     plane is taken per image on a standalone array, because a matmul over
     a stack, or over a slice of one, rounds differently."""
     n = len(data)
-    pxs = [codecs.decode(d, f) for d, f in zip(data, fmts)]
-    stats = np.empty((n, 7), dtype=np.float64)
-    dims = np.empty((n, 2), dtype=np.int32)
-    ph = np.empty(n, dtype=np.int64)
+    decoded = [_decode_checked(d, f) for d, f in zip(data, fmts)]
+    pxs = [px for px, _ in decoded]
+    ok = np.array([px is not None for px in pxs], dtype=bool)
+    stats = np.full((n, 7), np.nan)
+    dims = np.zeros((n, 2), dtype=np.int32)
+    ph = np.zeros(n, dtype=np.int64)
     groups: dict[tuple, list[int]] = {}
     for i, px in enumerate(pxs):
-        groups.setdefault(px.shape, []).append(i)
+        if px is not None:
+            groups.setdefault(px.shape, []).append(i)
     for (h, w, _), rows in groups.items():
         dims[rows] = (w, h)
         step = max(1, min(_CHUNK, _CHUNK_BYTES // (h * w * 3 * 8)))
@@ -98,6 +131,8 @@ def payload_features_np(data, fmts, stored=None) -> pd.DataFrame:
                 ph[idx] = codecs.phash_from_dct(
                     codecs.dct32_low8(codecs.gray_resize32(luma)))
     out = pd.DataFrame(stats, columns=_STATS_COLS)
+    out.insert(0, "ok", ok)
+    out.insert(1, "error_kind", [kind for _, kind in decoded])
     out["decoded_w"] = dims[:, 0]
     out["decoded_h"] = dims[:, 1]
     if stored is not None:
@@ -105,6 +140,9 @@ def payload_features_np(data, fmts, stored=None) -> pd.DataFrame:
         diff = np.asarray(stored, dtype=np.int64) ^ ph
         out["phash_hamming"] = _POPCOUNT8[
             diff.view(np.uint8).reshape(n, 8)].sum(axis=1, dtype=np.int32)
+    if not ok.all():
+        for c in out.select_dtypes("integer"):
+            out[c] = pd.arrays.IntegerArray(out[c].to_numpy(), ~ok)
     return out
 
 
@@ -114,14 +152,21 @@ def decode_stats(df, id_col: str = "image_id", bytes_col: str = "bytes",
     graft analog of the reference's per-record signal-stats extraction
     (extract_HRV.py:30-33 payload read + lead projection).
 
+    Fault-tolerant: every row gets ``ok``/``error_kind``
+    (``_decode_checked``), and a NULL, truncated or foreign payload
+    quarantines its ROW with NULL stats instead of aborting the stage — at
+    10^12 rows one corrupt payload must not kill every retry of its task
+    (the reference's serial loop, extract_HRV.py:30-33, dies on the first
+    bad record). Split the result on ``ok`` to route bad rows to a
+    quarantine sink.
+
     Runs as ``mapInPandas`` over the scan partitions: no shuffle, bounded
     Arrow batches, payload column pruned immediately after decode.
     """
     keep = keep if keep is not None else [id_col]
-    out_schema = ", ".join(
-        f"{c} {dict(zip(df.schema.names, (f.dataType.simpleString() for f in df.schema.fields)))[c]}"
-        for c in keep
-    ) + ", " + DECODE_STATS_FIELDS
+    types = {f.name: f.dataType.simpleString() for f in df.schema.fields}
+    out_schema = (", ".join(f"{c} {types[c]}" for c in keep)
+                  + ", " + DECODE_STATS_FIELDS)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for b in batches:
@@ -133,110 +178,19 @@ def decode_stats(df, id_col: str = "image_id", bytes_col: str = "bytes",
         .mapInPandas(run, schema=out_schema)
 
 
-QUARANTINE_FIELDS = (
-    "ok boolean, error_kind string, px_mean double, "
-    "decoded_w int, decoded_h int"
-)
-
-# First-bytes signature per supported format (decode dispatch contract,
-# datagen/codecs.py): payloads failing this check are classified
-# 'bad_magic' WITHOUT attempting a decode.
-_MAGICS = {
-    "bmp": (b"BM",),
-    "png": (b"\x89PNG",),
-    "jpeg": (b"DCTQ", b"FJPG"),
-}
-
-
-def decode_with_status(df, id_col: str = "image_id",
-                       bytes_col: str = "bytes", fmt_col: str = "fmt",
-                       keep: list[str] | None = None):
-    """Fault-tolerant decode: per-row ok/error_kind instead of a thrown
-    exception — at 10^12 rows a single corrupt payload must quarantine
-    its ROW, never abort the stage (the plain ``decode_stats`` kernel —
-    and the reference's serial loop, extract_HRV.py:30-33 — both die on
-    the first bad record).
-
-    error_kind taxonomy: 'ok' | 'null_payload' (NULL/empty bytes) |
-    'unsupported_fmt' | 'bad_magic' (signature mismatch, no decode
-    attempted) | 'corrupt' (decode raised mid-stream — truncation, bad
-    stream, shape mismatch). Stats columns are NULL for non-ok rows.
-
-    Same distributed shape as ``decode_stats``: mapInPandas on the scan
-    partitions, zero shuffle, payload pruned after the kernel. Split the
-    result on ``ok`` to route bad rows to a quarantine sink.
-    """
-    keep = keep if keep is not None else [id_col]
-    types = {f.name: f.dataType.simpleString() for f in df.schema.fields}
-    out_schema = (", ".join(f"{c} {types[c]}" for c in keep)
-                  + ", " + QUARANTINE_FIELDS)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            n = len(b)
-            ok = np.zeros(n, dtype=bool)
-            kind: list[str] = [""] * n
-            mean = np.full(n, np.nan)
-            dims = np.full((n, 2), -1, dtype=np.int64)
-            data_col = b[bytes_col].to_numpy()
-            fmts = b[fmt_col].to_numpy()
-            for i in range(n):
-                data, fmt = data_col[i], fmts[i]
-                magics = _MAGICS.get(fmt)
-                if data is None or len(data) == 0:
-                    kind[i] = "null_payload"
-                elif magics is None:
-                    kind[i] = "unsupported_fmt"
-                elif not any(bytes(data[: len(mg)]) == mg
-                             for mg in magics):
-                    kind[i] = "bad_magic"
-                else:
-                    try:
-                        px = codecs.decode(data, fmt).astype(np.float64)
-                        # structurally degenerate decodes (a crafted
-                        # header declaring zero area decodes without
-                        # raising) are corrupt, not ok — and the stats
-                        # reads stay inside the guard so a failure
-                        # there can never escape classification
-                        if px.ndim != 3 or px.size == 0:
-                            raise ValueError("degenerate decode shape")
-                        mean[i] = px.mean()
-                        dims[i] = (px.shape[1], px.shape[0])
-                    except Exception:
-                        kind[i] = "corrupt"
-                    else:
-                        ok[i] = True
-                        kind[i] = "ok"
-            out = b[keep].copy()
-            out["ok"] = ok
-            out["error_kind"] = kind
-            # NaN -> NULL and NA-int plumbing: nullable dtypes make the
-            # "stats are NULL for bad rows" contract explicit in Arrow
-            # (mean stays NaN wherever classification failed)
-            out["px_mean"] = pd.array(mean, dtype="Float64")
-            out["decoded_w"] = pd.array(
-                np.where(ok, dims[:, 0], None), dtype="Int32")
-            out["decoded_h"] = pd.array(
-                np.where(ok, dims[:, 1], None), dtype="Int32")
-            yield out
-
-    return df.select(*dict.fromkeys([*keep, bytes_col, fmt_col])) \
-        .mapInPandas(run, schema=out_schema)
-
-
 PAYLOAD_FEATURES_FIELDS = (
     DECODE_STATS_FIELDS + ", phash_recomputed long, phash_hamming int")
 
 
 def payload_features_struct_udf():
-    """Struct-returning scalar pandas UDF over (bytes, fmt, phash): decode
-    + pixel stats + pHash recompute + hamming vs the stored ``phash`` in
-    one pass (``payload_features_np``) — the U1+U2 fused analog (the
-    reference filters then peak-detects in one per-record pass,
-    HRV_features.py:98-105). Every other column (caption, ids,
+    """Struct-returning scalar pandas UDF over (bytes, fmt, phash): status,
+    decode + pixel stats + pHash recompute + hamming vs the stored
+    ``phash`` in one pass (``payload_features_np``) — the U1+U2 fused
+    analog (the reference filters then peak-detects in one per-record
+    pass, HRV_features.py:98-105). Every other column (caption, ids,
     timestamps) stays JVM-side, so the Arrow exchange carries only the
-    payload in and 11 numbers out, each of them one the flagship plan
-    emits. The flagship plan's payload kernel; tests check its values
+    payload in and 13 values out, each of them one the flagship plan
+    reads. The flagship plan's payload kernel; tests check its values
     against a per-image numpy oracle."""
     from pyspark.sql.functions import pandas_udf
     from pyspark.sql.types import StructType
@@ -247,34 +201,9 @@ def payload_features_struct_udf():
         return payload_features_np(data.to_numpy(), fmts.to_numpy(),
                                    stored.to_numpy())
 
-    return feats
-
-
-def phash_check(df, id_col: str = "image_id", bytes_col: str = "bytes",
-                fmt_col: str = "fmt", phash_col: str = "phash"):
-    """Recompute the 64-bit pHash from the payload and compare with the stored
-    column (U2 analog: event/fingerprint extraction from raw payload)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            recomputed = np.array(
-                [codecs.phash64(codecs.decode(d, f))
-                 for d, f in zip(b[bytes_col].to_numpy(), b[fmt_col].to_numpy())],
-                dtype=np.int64,
-            )
-            yield pd.DataFrame({
-                id_col: b[id_col],
-                "phash_stored": b[phash_col].astype("int64"),
-                "phash_recomputed": recomputed,
-                "hamming": np.array([
-                    bin((int(a) ^ int(r)) & ((1 << 64) - 1)).count("1")
-                    for a, r in zip(b[phash_col], recomputed)
-                ], dtype=np.int32),
-            })
-
-    return df.select(id_col, bytes_col, fmt_col, phash_col).mapInPandas(
-        run, schema=f"{id_col} string, phash_stored long, "
-                    "phash_recomputed long, hamming int")
+    # nondeterministic so that a filter on one of its fields (``ok``) is
+    # not pushed below the projection as a second call of the UDF
+    return feats.asNondeterministic()
 
 
 def resize_images(df, target_side: int, id_col: str = "image_id",

@@ -182,7 +182,7 @@ def benchmark_contamination(df: DataFrame, benchmark: DataFrame,
     marker-join on the gram key, one doc-keyed count agg. The benchmark
     side is tiny relative to the corpus (AQE broadcasts it; no hint, so
     a pathologically large benchmark degrades to a sane shuffle join
-    instead of OOMing the driver, the ``without_quarantined`` rationale).
+    instead of OOMing the driver).
 
     Exactness: counts are ints; ``contam_frac`` is ONE exact int/int
     quotient emitted unrounded (bit-identical cross-engine, CLAUDE.md);

@@ -411,15 +411,13 @@ def simhash64_relational(df: DataFrame, text_col: str = "text",
 
 
 def simhash_near_dups(df: DataFrame, text_col: str = "text",
-                      id_col: str = "doc_id", max_hamming: int = 3,
-                      method: str = "relational") -> DataFrame:
+                      id_col: str = "doc_id", max_hamming: int = 3
+                      ) -> DataFrame:
     """SimHash near-dups: bucket on 16-bit prefixes (4 rotations so any pair
     within hamming<=3 shares at least one exact 16-bit block — pigeonhole),
-    then verify hamming distance JVM-side with bit_count(xor).
-    ``method``: 'relational' (default, JVM bit votes) or 'kernel' (the
-    Arrow/Python oracle twin)."""
-    sig_fn = simhash64_relational if method == "relational" else simhash64
-    sig = sig_fn(df, text_col, id_col)
+    then verify hamming distance JVM-side with bit_count(xor). The
+    fingerprints are ``simhash64_relational`` (JVM bit votes)."""
+    sig = simhash64_relational(df, text_col, id_col)
     blocks = F.array(*[
         F.struct(F.lit(i).alias("blk"),
                  F.shiftrightunsigned(F.col("simhash"), 16 * i)

@@ -24,39 +24,14 @@ from ecg_feature_engineering_spark.operators import asof, windows
 from ecg_feature_engineering_spark.operators.text import quality_features
 
 
-def screen_payloads(images: DataFrame) -> DataFrame:
-    """Pre-flight payload screen for fault-tolerant ingest: classify every
-    payload with ``kernels.decode_with_status`` and return the THIN
-    quarantine table (image_id, fmt, error_kind) of undecodable rows.
-
-    MATERIALIZE this table (checkpoint stage / parquet sink) before
-    anti-joining it back — deriving good rows from the un-materialized
-    DataFrame re-runs the decode lineage, i.e. a second full-corpus
-    decode pass. flagship_job checkpoints it as stage 0, which makes the
-    quarantine sink itself atomic, lineage-tracked, and resumable. The
-    alternative — letting ``image_features`` hit the first corrupt
-    payload — aborts the stage (and with it every retry of the task)."""
-    status = kernels.decode_with_status(images, keep=["image_id", "fmt"])
-    return status.where(~F.col("ok")).select("image_id", "fmt",
-                                             "error_kind")
-
-
-def without_quarantined(images: DataFrame,
-                        quarantine: DataFrame) -> DataFrame:
-    """Original image rows (payload intact) minus the quarantined ids —
-    an anti-join with NO forced broadcast: corruption is usually rare
-    (AQE broadcasts the thin side by itself), but a systematic upstream
-    fault can mark a large fraction bad, and a hinted broadcast would
-    OOM the driver exactly in the widespread-failure case the screen
-    exists to survive."""
-    return images.join(quarantine.select("image_id"), "image_id",
-                       "left_anti")
-
-
 def image_features(images: DataFrame) -> DataFrame:
-    """Payload-side features: decoded-pixel stats + recomputed pHash +
-    hamming-vs-stored (one fused Arrow kernel — payload decoded once),
-    plus pHash bit features and caption quality features (JVM-side).
+    """Payload-side features: decode status (``ok``/``error_kind``),
+    decoded-pixel stats + recomputed pHash + hamming-vs-stored (one fused
+    Arrow kernel — payload decoded once), plus pHash bit features and
+    caption quality features (JVM-side). A NULL, truncated or foreign
+    payload yields a row with ``ok`` false and NULL payload features,
+    never a failed stage; ``assemble`` drops such rows, and
+    ``jobs/flagship_job.py`` counts them as quarantined.
 
     The kernel is a struct-returning scalar pandas UDF: only
     (bytes, fmt, phash) cross the Python boundary; ids/timestamps/captions
@@ -124,17 +99,19 @@ def assemble(img_feats: DataFrame, ev_feats: DataFrame,
     """As-of join the image and event feature streams onto the snapshot
     grid and emit the flagship's feature row per (entity_id, as_of_ts) —
     the last stage of ``feature_plan`` and of ``jobs/flagship_job.py``,
-    so the lazy plan and the checkpointed job emit one feature set."""
+    so the lazy plan and the checkpointed job emit one feature set.
+    Image rows whose payload did not decode are dropped first: a
+    snapshot carries the latest decodable image at or before it."""
     # Project each right side to ONLY the as-of-carried columns the plan
     # emits before the union+window: the per-source pack struct blocks
     # Catalyst's column pruning through the window fill, so every column
     # still present here rides the as-of shuffle+sort — the biggest
     # exchange in the plan. image_features carries a few columns this
-    # plan does not emit (the stored phash, the caption's n_chars_q,
-    # upper_ratio and digit_ratio); they are dropped here. selectExpr
-    # sends each name as text, where select would build a Column per name
-    # over py4j (three round trips each).
-    img_feats = img_feats.selectExpr(
+    # plan does not emit (the decode status, the stored phash, the
+    # caption's n_chars_q, upper_ratio and digit_ratio); they are dropped
+    # here. selectExpr sends each name as text, where select would build
+    # a Column per name over py4j (three round trips each).
+    img_feats = img_feats.where("ok").selectExpr(
         "entity_id", "ts", "image_id",
         "px_mean", "px_std", "luma_mean", "luma_std",
         "r_mean", "g_mean", "b_mean", "decoded_w", "decoded_h",

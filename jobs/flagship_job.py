@@ -12,6 +12,11 @@ per-partition lineage + row-count/latency metrics). Re-running with the
 same --checkpoint-root restarts at the first incomplete stage; the metrics
 table is printed and written at the end of every run.
 
+Fault-tolerant: each payload is decoded once, in the ``image_features``
+stage. A NULL, truncated or foreign payload does not fail the stage: its
+row is checkpointed with ``ok`` false and its ``error_kind``, left out of
+the feature vectors, and counted in the summary's ``quarantined_rows``.
+
 The session is created by spark-submit's conf on a cluster; the local
 fallback uses the engine factory.
 """
@@ -37,12 +42,6 @@ def main() -> None:
     ap.add_argument("--checkpoint-root", required=True)
     ap.add_argument("--n-images", type=int, default=2000)
     ap.add_argument("--seed", type=int, default=42)
-    ap.add_argument("--quarantine", action="store_true",
-                    help="pre-screen payloads (decode_with_status); "
-                         "corrupt/null/bad-magic rows land in the "
-                         "checkpointed quarantine table "
-                         "(<checkpoint-root>/payload_screen/data) "
-                         "instead of aborting the decode stage")
     args = ap.parse_args()
 
     from pyspark.sql import SparkSession
@@ -57,43 +56,21 @@ def main() -> None:
     _c.ensure_workers_can_import(spark)
     # hash only the DATA-affecting inputs: --output/--checkpoint-root
     # don't change stage contents, so changing them must not force a
-    # full re-decode (the resume contract). --quarantine IS data-
-    # affecting (it changes downstream row membership), so toggling it
-    # on a resume invalidates the stages instead of silently serving
-    # the other mode's data.
+    # full re-decode (the resume contract)
     data_params = {k: v for k, v in vars(args).items()
-                   if k in ("events", "images", "n_images", "seed",
-                            "quarantine")}
+                   if k in ("events", "images", "n_images", "seed")}
     cp = StageCheckpointer(spark, args.checkpoint_root, params=data_params)
     n_entities = max(args.n_images // 20, 2)
 
-    def load_images():
-        if args.images:
-            return spark.read.parquet(args.images)
-        return datagen.images_df(spark, args.n_images, args.seed, n_entities)
-
-    # optional stage 0: payload screen. The checkpointed stage IS the
-    # quarantine sink (<checkpoint-root>/payload_screen/data — atomic,
-    # lineage-tracked, survives --output changes on resume); cp.run
-    # returns the READ-BACK thin table, so the anti-join below never
-    # re-runs the decode lineage (one screen pass total), and only
-    # (image_id, fmt, error_kind) is ever checkpointed — never a second
-    # copy of the payload corpus.
-    n_quarantined = 0
-    if args.quarantine:
-        quarantine = cp.run(
-            "payload_screen", lambda: fplan.screen_payloads(load_images()))
-        n_quarantined = quarantine.count()
-        feature_input = fplan.without_quarantined(load_images(), quarantine)
-    else:
-        feature_input = None
-
     # stage 1: payload features (the expensive decode pass — checkpointed
-    # so a restart never re-decodes)
-    img_feats = cp.run(
-        "image_features",
-        lambda: fplan.image_features(
-            feature_input if feature_input is not None else load_images()))
+    # so a restart never re-decodes). It is also the quarantine sink:
+    # a payload that does not decode lands here with ok = false and its
+    # error_kind (<checkpoint-root>/image_features/data), and assemble
+    # drops it
+    img_feats = cp.run("image_features", lambda: fplan.image_features(
+        spark.read.parquet(args.images) if args.images
+        else datagen.images_df(spark, args.n_images, args.seed, n_entities)))
+    n_quarantined = img_feats.where("NOT ok").count()
     # stage 2: event window features
     ev_feats = cp.run(
         "event_features",

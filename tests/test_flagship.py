@@ -91,80 +91,121 @@ def test_flagship_matches_golden_fixture(spark, sf_dir):
                 want[c].where(want[c].notna(), None).tolist(), c
 
 
-def test_screen_payloads_quarantines_and_preserves_features(spark):
-    """Fault-tolerant ingest: plant corruption, screen, and the surviving
-    rows' feature vectors must be IDENTICAL to running the clean subset
-    straight through image_features (screen changes membership, never
-    values)."""
+def _plant_bad_copies(img):
+    """Every fourth image again, under a new id one second later, with its
+    payload NULL or cut in half (alternately): left in, each copy would be
+    the entity's latest image for the snapshots after it."""
+    idx = F.substring("image_id", 4, 8).cast("int")
+    bad = img.where(idx % 4 == 0).select(
+        F.concat("image_id", F.lit("_bad")).alias("image_id"),
+        F.when(idx % 8 == 4, F.lit(None).cast("binary"))
+         .otherwise(F.substring(F.col("bytes"), F.lit(1),
+                                (F.octet_length("bytes") / 2).cast("int")))
+        .alias("bytes"),
+        "w", "h", "fmt", "caption", "phash", "entity_id",
+        (F.col("ts") + F.expr("INTERVAL 1 SECOND")).alias("ts"))
+    return img.unionByName(bad)
+
+
+def test_image_features_quarantines_and_preserves_features(spark, sf_dir):
+    """Fault-tolerant ingest: with bad payloads planted, image_features
+    flags each bad row instead of failing, its good rows equal the clean
+    corpus's, and the assembled feature vectors equal the clean corpus's
+    (quarantine changes membership, never values)."""
     from ecg_feature_engineering_spark.datagen import images as datagen
     from ecg_feature_engineering_spark.plans import flagship as fplan
 
-    img = datagen.images_df(spark, 40, seed=21)
-    idx = F.substring("image_id", 4, 8).cast("int")
-    corrupted = img.withColumn(
-        "bytes",
-        F.when(idx % 8 == 1, F.lit(None).cast("binary"))
-         .when(idx % 8 == 5,
-               F.substring(F.col("bytes"), F.lit(1),
-                           (F.octet_length("bytes") / F.lit(2)).cast("int")))
-         .otherwise(F.col("bytes")))
-    bad = fplan.screen_payloads(corrupted)
-    bad_pdf = bad.toPandas()
-    assert len(bad_pdf) == 10  # 5 null + 5 truncated
-    assert set(bad_pdf["error_kind"]) == {"null_payload", "corrupt"}
-    good = fplan.without_quarantined(corrupted, bad)
-    got = fplan.image_features(good).toPandas() \
+    img = datagen.images_df(spark, 80, 21, 4)
+    feats = fplan.image_features(_plant_bad_copies(img)).cache()
+    bad = feats.where(~F.col("ok")).toPandas()
+    assert len(bad) == 20  # 10 null + 10 truncated
+    assert bad["image_id"].str.endswith("_bad").all()
+    assert sorted(bad["error_kind"].value_counts().items()) == [
+        ("corrupt", 10), ("null_payload", 10)]
+    assert bad[["px_mean", "decoded_w", "phash_hamming"]].isna().all().all()
+    got = feats.where("ok").toPandas() \
         .sort_values("image_id").reset_index(drop=True)
-    clean = img.join(bad.select("image_id"), "image_id", "left_anti")
-    want = fplan.image_features(clean).toPandas() \
+    want = fplan.image_features(img).toPandas() \
         .sort_values("image_id").reset_index(drop=True)
-    assert len(got) == 30
     pd.testing.assert_frame_equal(got, want)
+
+    ev = fplan.event_features(spark.read.parquet(f"{sf_dir}/events.parquet"),
+                              4)
+    snaps = datagen.snapshots_df(spark, 4, 12, 21)
+    got = _collect(fplan.assemble(feats, ev, snaps))
+    want = _collect(fplan.assemble(fplan.image_features(img), ev, snaps))
+    pd.testing.assert_frame_equal(got, want)
+    feats.unpersist()
 
 
 def test_flagship_job_quarantine_e2e(spark, sf_dir, tmp_path):
-    """The spark-submit surface end to end: flagship_job --quarantine on a
-    corpus whose payloads the job itself synthesizes, from a FOREIGN cwd
-    (zip-shipped imports), incl. resume metrics + quarantine sink."""
+    """The spark-submit surface end to end, from a FOREIGN cwd (zip-shipped
+    imports): a run over the corpus the job synthesizes, then a run over
+    an --images parquet of that corpus with bad payloads planted, and its
+    resume. The bad rows are quarantined in the image_features stage and
+    left out, so both runs emit the same feature vectors."""
     import json
+    import os
     import subprocess
     import sys
 
-    out = tmp_path / "out"
-    ckpt = tmp_path / "ckpt"
-    r = subprocess.run(
-        [sys.executable, "/root/repo/jobs/flagship_job.py",
-         "--events", f"{sf_dir}/events.parquet",
-         "--output", str(out), "--checkpoint-root", str(ckpt),
-         "--n-images", "80", "--quarantine"],
-        cwd=str(tmp_path), capture_output=True, text=True, timeout=600)
-    assert r.returncode == 0, r.stderr[-3000:]
-    summary = json.loads(r.stdout.strip().splitlines()[-1])
-    # the seeded corpus is clean -> nothing quarantined; the sink is the
-    # checkpointed stage table (survives --output changes on resume)
-    assert summary["quarantined_rows"] == 0
-    assert summary["output_rows"] > 0
-    assert spark.read.parquet(
-        str(ckpt / "payload_screen" / "data")).count() == 0
-    assert {"payload_screen", "image_features", "event_features",
-            "feature_vectors"} <= {s["stage"] for s in summary["stages"]}
+    from ecg_feature_engineering_spark.datagen import images as datagen
+
+    script = os.path.join(os.path.dirname(os.path.dirname(
+        os.path.abspath(__file__))), "jobs", "flagship_job.py")
+
+    def job(out, ckpt, *extra):
+        r = subprocess.run(
+            [sys.executable, script,
+             "--events", f"{sf_dir}/events.parquet",
+             "--output", str(out), "--checkpoint-root", str(ckpt),
+             "--n-images", "80", *extra],
+            cwd=str(tmp_path), capture_output=True, text=True, timeout=600)
+        assert r.returncode == 0, r.stderr[-3000:]
+        return json.loads(r.stdout.strip().splitlines()[-1])
+
+    def output(path):
+        return _collect(spark.read.parquet(str(path)))
+
+    stages = {"image_features", "event_features", "feature_vectors"}
+    clean = job(tmp_path / "clean", tmp_path / "ckpt_clean")
+    assert clean["quarantined_rows"] == 0
+    assert clean["output_rows"] > 0
+    assert {s["stage"] for s in clean["stages"]} == stages
     # the job and the certified lazy plan emit one feature set
-    assert spark.read.parquet(str(out)).columns == \
+    assert spark.read.parquet(str(tmp_path / "clean")).columns == \
         flagship(spark, sf_dir, n_images=80).columns
+
+    # the corpus the job synthesizes for --n-images 80, plus 20 bad copies
+    images = tmp_path / "images.parquet"
+    _plant_bad_copies(datagen.images_df(spark, 80, 42, 4)) \
+        .write.parquet(str(images))
+    ckpt = tmp_path / "ckpt"
+    summary = job(tmp_path / "out", ckpt, "--images", str(images))
+    assert summary["quarantined_rows"] == 20
+    assert {s["stage"] for s in summary["stages"]} == stages
+    sink = spark.read.parquet(str(ckpt / "image_features" / "data")) \
+        .where("NOT ok").toPandas()
+    assert sink["image_id"].str.endswith("_bad").all()
+    assert sorted(sink["error_kind"].value_counts().items()) == [
+        ("corrupt", 10), ("null_payload", 10)]
+    pd.testing.assert_frame_equal(output(tmp_path / "out"),
+                                  output(tmp_path / "clean"))
+
     # resume with a DIFFERENT --output (explicitly supported: only data
-    # params hash) — every stage incl. the quarantine sink must be
-    # served from the checkpoint, not recomputed or re-located
-    r2 = subprocess.run(
-        [sys.executable, "/root/repo/jobs/flagship_job.py",
-         "--events", f"{sf_dir}/events.parquet",
-         "--output", str(tmp_path / "out2"),
-         "--checkpoint-root", str(ckpt),
-         "--n-images", "80", "--quarantine"],
-        cwd=str(tmp_path), capture_output=True, text=True, timeout=600)
-    assert r2.returncode == 0, r2.stderr[-3000:]
-    s2 = json.loads(r2.stdout.strip().splitlines()[-1])
-    assert s2["quarantined_rows"] == 0
+    # params hash) — every stage must be served from the checkpoint, not
+    # recomputed or re-located
+    def run_ids():
+        return {s: json.loads((ckpt / s / "manifest.json").read_text())
+                ["run_id"] for s in stages}
+
+    before = run_ids()
+    s2 = job(tmp_path / "out2", ckpt, "--images", str(images))
+    assert run_ids() == before
+    assert s2["quarantined_rows"] == 20
     assert s2["output_rows"] == summary["output_rows"]
+    pd.testing.assert_frame_equal(output(tmp_path / "out2"),
+                                  output(tmp_path / "out"))
 
 
 def test_feature_plan_build_round_trips_bounded(spark, sf_dir, monkeypatch):

@@ -91,6 +91,8 @@ def test_decode_stats_matches_numpy(spark):
     img = datagen.images_df(spark, 60, seed=9)
     got = kernels.decode_stats(img, keep=["image_id"]).toPandas() \
         .set_index("image_id")
+    assert bool(got["ok"].all())
+    assert set(got["error_kind"]) == {"ok"}
     pdf = img.select("image_id", "bytes", "fmt").toPandas()
     for _, row in pdf.iloc[:20].iterrows():
         px = codecs.decode(row["bytes"], row["fmt"]).astype(np.float64)
@@ -103,7 +105,8 @@ def test_decode_stats_matches_numpy(spark):
         assert r["decoded_w"] == px.shape[1]
 
 
-_PAYLOAD_COLS = ["px_mean", "px_std", "luma_mean", "luma_std", "r_mean",
+_PAYLOAD_COLS = ["ok", "error_kind",
+                 "px_mean", "px_std", "luma_mean", "luma_std", "r_mean",
                  "g_mean", "b_mean", "decoded_w", "decoded_h",
                  "phash_recomputed", "phash_hamming"]
 
@@ -141,7 +144,7 @@ def _payload_oracle(pdf: pd.DataFrame) -> pd.DataFrame:
         px = u8.astype(np.float64)
         luma = px @ _LUMA
         ph = codecs.phash64(u8)
-        out.append([px.mean(), px.std(), luma.mean(), luma.std(),
+        out.append([True, "ok", px.mean(), px.std(), luma.mean(), luma.std(),
                     px[..., 0].mean(), px[..., 1].mean(), px[..., 2].mean(),
                     px.shape[1], px.shape[0], ph,
                     bin((int(stored) ^ ph) & ((1 << 64) - 1)).count("1")])
@@ -170,7 +173,7 @@ def test_payload_kernel_body_matches_per_image_oracle():
     assert (want["phash_hamming"] > 0).any()
     _assert_payload_equal(got, want)
     stats_only = kernels.payload_features_np(pdf["bytes"], pdf["fmt"])
-    _assert_payload_equal(stats_only, want[_PAYLOAD_COLS[:9]])
+    _assert_payload_equal(stats_only, want[_PAYLOAD_COLS[:11]])
 
 
 def test_payload_kernel_in_spark_small_arrow_batches(spark):
@@ -193,16 +196,18 @@ def test_payload_kernel_in_spark_small_arrow_batches(spark):
         spark.conf.set(key, old)
     assert got["image_id"].tolist() == pdf["image_id"].tolist()
     _assert_payload_equal(got, want)
-    _assert_payload_equal(stats, want[_PAYLOAD_COLS[:9]])
+    _assert_payload_equal(stats, want[_PAYLOAD_COLS[:11]])
 
 
 def test_phash_integrity(spark):
     """Stored phash (hot-prefix rows excluded) must equal the recomputed one."""
     img = datagen.images_df(spark, 120, seed=42)
-    got = kernels.phash_check(img).toPandas()
-    hot = (got["phash_stored"].to_numpy().astype(np.int64) >> 48
-           & 0xFFFF) == 0x7FEE
-    assert (got.loc[~hot, "hamming"] == 0).all()
+    udf = kernels.payload_features_struct_udf()
+    got = img.select("phash", udf("bytes", "fmt", "phash").alias("f")) \
+        .select("phash", "f.*").toPandas()
+    hot = (got["phash"].to_numpy() >> 48 & 0xFFFF) == 0x7FEE
+    assert (got.loc[~hot, "phash_hamming"] == 0).all()
+    assert (got.loc[~hot, "phash_recomputed"] == got.loc[~hot, "phash"]).all()
     assert hot.sum() > 0  # the skew knob is actually exercised
 
 
@@ -285,49 +290,70 @@ def test_resize_images_kernel(spark):
                                       codecs.area_resize(orig, 16, 16))
 
 
-def test_decode_with_status_clean_corpus_matches_decode_stats(spark):
-    img = datagen.images_df(spark, 45, seed=11)
-    got = kernels.decode_with_status(img, keep=["image_id", "fmt"]) \
-        .toPandas().set_index("image_id").sort_index()
-    ref = kernels.decode_stats(img, keep=["image_id"]) \
-        .toPandas().set_index("image_id").sort_index()
-    assert bool(got["ok"].all())
-    assert set(got["error_kind"]) == {"ok"}
-    np.testing.assert_allclose(got["px_mean"].astype(float),
-                               ref["px_mean"], rtol=0, atol=0)
-    assert (got["decoded_w"].astype(int) == ref["decoded_w"]).all()
+def _zero_area_bmp(data: bytes) -> bytes:
+    """A BMP whose header declares width 0: it decodes without raising."""
+    import struct
+
+    b = bytearray(data)
+    struct.pack_into("<ii", b, 18, 0, 8)  # width=0, height=8: zero area
+    return bytes(b)
 
 
-def test_decode_with_status_classifies_and_survives(spark, tmp_path):
+def _planted_bad_rows(pdf: pd.DataFrame) -> dict[str, str]:
+    """Damage the first five rows of an image table in place, one per
+    failure class plus an empty payload; returns image_id -> expected
+    error_kind."""
+    ids = list(pdf["image_id"])
+    for i, fn in enumerate([lambda b: b[: len(b) // 2],     # truncated
+                            lambda b: b"XX" + bytes(b)[2:],  # clobbered magic
+                            lambda b: None,                  # NULL payload
+                            lambda b: b""]):                 # empty payload
+        pdf.at[pdf.index[i], "bytes"] = fn(pdf.iloc[i]["bytes"])
+    pdf.loc[pdf["image_id"] == ids[4], "fmt"] = "tiff"  # unknown format
+    return {ids[0]: "corrupt", ids[1]: "bad_magic", ids[2]: "null_payload",
+            ids[3]: "null_payload", ids[4]: "unsupported_fmt"}
+
+
+def test_payload_kernel_body_classifies_planted_bad_rows():
+    """The kernel body over the oracle corpus with bad rows planted, a
+    zero-area header among them: each bad row gets its error_kind and
+    NULL values, and every ok row is still bit-identical to the per-image
+    oracle."""
+    pdf = _payload_corpus()
+    want = _payload_oracle(pdf)
+    kinds = _planted_bad_rows(pdf)
+    bmp = pdf.index[pdf["fmt"] == "bmp"][-1]
+    pdf.at[bmp, "bytes"] = _zero_area_bmp(pdf.at[bmp, "bytes"])
+    kinds[pdf.at[bmp, "image_id"]] = "corrupt"
+    got = kernels.payload_features_np(pdf["bytes"], pdf["fmt"],
+                                      pdf["phash"])
+    assert list(got.columns) == _PAYLOAD_COLS
+    bad = pdf["image_id"].isin(kinds).to_numpy()
+    assert bad.sum() == 6
+    assert got.loc[bad, "error_kind"].tolist() == \
+        [kinds[i] for i in pdf.loc[bad, "image_id"]]
+    assert not got.loc[bad, "ok"].any()
+    assert got.loc[bad, _PAYLOAD_COLS[2:]].isna().all().all()
+    _assert_payload_equal(got[~bad], want[~bad])
+
+
+def test_decode_stats_classifies_and_survives(spark, tmp_path):
     """One corrupt payload must quarantine its row, not abort the stage —
     and every failure class lands in its own error_kind."""
     pdf = datagen.images_df(spark, 30, seed=12).toPandas()
-    by_id = pdf.set_index("image_id", drop=False)
-
-    def mutate(row_id, fn):
-        i = by_id.index.get_loc(row_id)
-        pdf.loc[pdf.index[i], "bytes"] = fn(pdf.iloc[i]["bytes"])
-
-    ids = list(pdf["image_id"])
-    mutate(ids[0], lambda b: b[: len(b) // 2])          # truncated stream
-    mutate(ids[1], lambda b: b"XX" + bytes(b)[2:])      # clobbered magic
-    mutate(ids[2], lambda b: None)                      # NULL payload
-    mutate(ids[3], lambda b: b"")                       # empty payload
-    pdf.loc[pdf["image_id"] == ids[4], "fmt"] = "tiff"  # unknown format
+    kinds = _planted_bad_rows(pdf)
     df = spark.createDataFrame(pdf)
-    out = kernels.decode_with_status(df, keep=["image_id", "fmt"]) \
+    out = kernels.decode_stats(df, keep=["image_id", "fmt"]) \
         .toPandas().set_index("image_id")
-    assert out.loc[ids[0], "error_kind"] == "corrupt"
-    assert out.loc[ids[1], "error_kind"] == "bad_magic"
-    assert out.loc[ids[2], "error_kind"] == "null_payload"
-    assert out.loc[ids[3], "error_kind"] == "null_payload"
-    assert out.loc[ids[4], "error_kind"] == "unsupported_fmt"
+    for image_id, kind in kinds.items():
+        assert out.loc[image_id, "error_kind"] == kind, image_id
     good = out[out["ok"]]
     assert len(good) == 25 and good["px_mean"].notna().all()
+    assert set(good["error_kind"]) == {"ok"}
     bad = out[~out["ok"]]
     assert bad["px_mean"].isna().all() and bad["decoded_w"].isna().all()
     # quarantine sink roundtrip: bad rows routed to parquet with their kind
-    q = kernels.decode_with_status(df, keep=["image_id", "fmt"]) \
+    q = kernels.decode_stats(df, keep=["image_id", "fmt"]) \
         .where(~F.col("ok")).select("image_id", "fmt", "error_kind")
     qdir = str(tmp_path / "quarantine")
     q.write.mode("overwrite").parquet(qdir)
@@ -337,18 +363,14 @@ def test_decode_with_status_classifies_and_survives(spark, tmp_path):
         "corrupt", "bad_magic", "null_payload", "unsupported_fmt"}
 
 
-def test_decode_with_status_degenerate_shape_is_corrupt(spark):
+def test_decode_stats_degenerate_shape_is_corrupt(spark):
     """A crafted header declaring zero area decodes without raising —
-    must classify 'corrupt', never ok-with-NULL-stats (review finding)."""
-    import struct
-
+    must classify 'corrupt', never ok-with-NULL-stats."""
     pdf = datagen.images_df(spark, 3, seed=13).toPandas()
     pdf = pdf[pdf["fmt"] == "bmp"].iloc[:1].copy()
     assert len(pdf) == 1
-    b = bytearray(pdf.iloc[0]["bytes"])
-    struct.pack_into("<ii", b, 18, 0, 8)  # width=0, height=8: zero area
-    pdf.loc[pdf.index[0], "bytes"] = bytes(b)
-    out = kernels.decode_with_status(spark.createDataFrame(pdf),
-                                     keep=["image_id"]).toPandas()
+    pdf.loc[pdf.index[0], "bytes"] = _zero_area_bmp(pdf.iloc[0]["bytes"])
+    out = kernels.decode_stats(spark.createDataFrame(pdf),
+                               keep=["image_id"]).toPandas()
     assert out.iloc[0]["error_kind"] == "corrupt"
     assert not out.iloc[0]["ok"] and pd.isna(out.iloc[0]["px_mean"])

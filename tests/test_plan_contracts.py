@@ -32,6 +32,7 @@ def _counts(df):
         "python": len(re.findall(
             r"ArrowEvalPython|MapInPandas|FlatMapGroupsInPandas"
             r"|BatchEvalPython", p)),
+        "arrow_eval": len(re.findall(r"ArrowEvalPython", p)),
         "cartesian": len(re.findall(r"CartesianProduct", p)),
     }
 
@@ -153,7 +154,9 @@ def test_image_decode_is_shuffle_free(spark, sf_dir):
 def test_flagship_shuffle_budget(spark, sf_dir):
     """PERF.md's headline claim: both as-of joins fused into ONE
     shuffle+sort (asof_join_many), 2 data shuffles total, no cartesian,
-    no Python off the payload/digest path."""
+    no Python off the payload/digest path, and the payload kernel run
+    once: the ok-filter in ``assemble`` must not plan a second call of
+    the struct UDF."""
     contract.ensure_workers_can_import(spark)
     from ecg_feature_engineering_spark.plans import flagship as fp
 
@@ -163,3 +166,4 @@ def test_flagship_shuffle_budget(spark, sf_dir):
     # (the regression this test exists for) would add a third shuffle
     assert c["shuffles"] <= 2, c
     assert c["cartesian"] == 0, c
+    assert c["arrow_eval"] == 1, c

@@ -35,15 +35,6 @@ def test_simhash_relational_empty_doc(spark):
     assert got.loc[2, "simhash"] != 0
 
 
-def test_simhash_near_dups_methods_agree(spark, sf_dir):
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    rel = dedup.simhash_near_dups(docs, method="relational").toPandas()
-    ker = dedup.simhash_near_dups(docs, method="kernel").toPandas()
-    key = ["id_a", "id_b", "hamming"]
-    assert (sorted(map(tuple, rel[key].to_numpy()))
-            == sorted(map(tuple, ker[key].to_numpy())))
-
-
 # ------------------------------------------------------------ blocked SampEn
 def test_cheb_pair_counts_matches_bruteforce():
     rng = np.random.default_rng(7)
@@ -164,17 +155,27 @@ def test_seeded_shuffle_is_permutation_and_matches_global_sort(spark):
 
 # ------------------------------------------------------------ worker zip
 def test_worker_zip_rebuilt_when_stale(spark):
-    import tempfile
     import time
 
     contract.ensure_workers_can_import(spark)
-    zpath = os.path.join(tempfile.gettempdir(),
-                         "ecg_feature_engineering_spark_pyfiles.zip")
+    zpath = contract.worker_zip_path()
     assert os.path.exists(zpath)
     os.utime(zpath, (1, 1))  # pretend the zip predates every source edit
     contract._SHIPPED.clear()
     contract.ensure_workers_can_import(spark)
     assert os.path.getmtime(zpath) > time.time() - 60  # rebuilt fresh
+
+
+def test_worker_zip_path_is_per_checkout(tmp_path):
+    """Two checkouts sharing one temp dir build two zips: a zip keyed only
+    on its mtime would ship one checkout's code to the other's
+    executors."""
+    a, b = (str(tmp_path / d / "ecg_feature_engineering_spark")
+            for d in ("a", "b"))
+    assert contract.worker_zip_path(a) != contract.worker_zip_path(b)
+    assert contract.worker_zip_path(a) == contract.worker_zip_path(a)
+    assert contract.worker_zip_path() == \
+        contract.worker_zip_path(os.path.dirname(contract.__file__))
 
 
 # ------------------------------------------------------------ U8 inference

@@ -52,7 +52,7 @@ def test_streaming_decode_equals_batch(spark, audio_dir):
 
 
 def test_streaming_quarantine_equals_batch(spark, tmp_path_factory):
-    """Fault-tolerant decode on a STREAM: decode_with_status is a
+    """Fault-tolerant decode on a STREAM: decode_stats is a
     stateless mapInPandas transform, so the quarantine classification —
     including corrupt/null payload rows — is identical micro-batch by
     micro-batch to the batch run (streaming ingest must quarantine, not
@@ -78,14 +78,14 @@ def test_streaming_quarantine_equals_batch(spark, tmp_path_factory):
     full.where("image_id >= 'img00000015'").coalesce(1) \
         .write.mode("append").parquet(str(d))
 
-    batch = kernels.decode_with_status(
+    batch = kernels.decode_stats(
         spark.read.parquet(str(d)), keep=["image_id", "fmt"]) \
         .toPandas().sort_values("image_id").reset_index(drop=True)
     assert set(batch["error_kind"]) == {"ok", "null_payload", "corrupt"}
 
     stream = (spark.readStream.schema(spark.read.parquet(str(d)).schema)
               .option("maxFilesPerTrigger", 1).parquet(str(d)))
-    q = (kernels.decode_with_status(stream, keep=["image_id", "fmt"])
+    q = (kernels.decode_stats(stream, keep=["image_id", "fmt"])
          .writeStream.outputMode("append").format("memory")
          .queryName("quarantine_stream").start())
     q.processAllAvailable()
