@@ -290,6 +290,24 @@ def test_resize_images_kernel(spark):
                                       codecs.area_resize(orig, 16, 16))
 
 
+def test_decode_with_status_clean_corpus_matches_decode_stats(spark):
+    """On a clean corpus the status-carrying struct UDF (the flagship
+    plan's path) marks every row ok and agrees bit for bit with
+    ``decode_stats`` on status and values."""
+    img = datagen.images_df(spark, 45, seed=11)
+    udf = kernels.payload_features_struct_udf()
+    got = img.select("image_id", udf("bytes", "fmt", "phash").alias("f")) \
+        .select("image_id", "f.*").toPandas().set_index("image_id") \
+        .sort_index()
+    ref = kernels.decode_stats(img, keep=["image_id"]) \
+        .toPandas().set_index("image_id").sort_index()
+    assert bool(got["ok"].all()) and bool(ref["ok"].all())
+    assert set(got["error_kind"]) == set(ref["error_kind"]) == {"ok"}
+    np.testing.assert_allclose(got["px_mean"].astype(float),
+                               ref["px_mean"], rtol=0, atol=0)
+    assert (got["decoded_w"].astype(int) == ref["decoded_w"]).all()
+
+
 def _zero_area_bmp(data: bytes) -> bytes:
     """A BMP whose header declares width 0: it decodes without raising."""
     import struct
