@@ -21,6 +21,7 @@ inside vectorized pandas/Arrow kernels — never as per-row Python UDFs.
 
 from __future__ import annotations
 
+import functools
 import struct
 import zlib
 
@@ -98,8 +99,10 @@ def decode_png(data: bytes) -> np.ndarray:
     raw = np.frombuffer(zlib.decompress(b"".join(idat)), dtype=np.uint8)
     rows = raw.reshape(h, 1 + w * 3)
     filters = rows[:, 0]
+    if not filters.any():  # our encoder emits filter 0 on every scanline
+        return rows[:, 1:].reshape(h, w, 3).copy()
     px = rows[:, 1:].reshape(h, w, 3).astype(np.int32)
-    # undo PNG filters (our encoder emits 0 only, but accept 0/1/2 for safety)
+    # undo PNG filters (accept 0/1/2 from other encoders)
     for y in range(h):
         f = filters[y]
         if f == 0:
@@ -135,10 +138,14 @@ _JPEG_LUMA_QTABLE = np.array([
 ], dtype=np.float64)
 
 
+@functools.lru_cache(maxsize=None)
 def _quant_table(quality: int) -> np.ndarray:
-    """libjpeg quality scaling convention."""
+    """libjpeg quality scaling convention. Cached per quality (the decode
+    of every payload asks for it) and read-only, as it is shared."""
     s = 5000 / quality if quality < 50 else 200 - 2 * quality
-    return np.maximum(np.floor((s * _JPEG_LUMA_QTABLE + 50) / 100), 1.0)
+    qt = np.maximum(np.floor((s * _JPEG_LUMA_QTABLE + 50) / 100), 1.0)
+    qt.flags.writeable = False
+    return qt
 
 
 def _dct8_matrix() -> np.ndarray:

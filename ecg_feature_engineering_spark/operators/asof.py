@@ -30,7 +30,9 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, DataType, MapType, StructType
+
+from ecg_feature_engineering_spark.operators.sqltext import (
+    ident, lit, sql_type)
 
 _SIDE = "__asof_is_left"
 _SRC = "__src"
@@ -142,26 +144,26 @@ def asof_join_many(
     # with a few hundred of them building the plan was mostly waiting on
     # the gateway. The text parses to the expressions the Column API built.
     def null(dt) -> str:
-        return f"CAST(NULL AS {_sql_type(dt)})"
+        return f"CAST(NULL AS {sql_type(dt)})"
 
     u = left.selectExpr(
-        *map(_q, left_cols), f"1 AS {_SIDE}", f"-1 AS {_SRC}",
-        *[f"{null(dt)} AS {_q(oc)}" for oc, _, _, dt in fill])
+        *map(ident, left_cols), f"1 AS {_SIDE}", f"-1 AS {_SRC}",
+        *[f"{null(dt)} AS {ident(oc)}" for oc, _, _, dt in fill])
     for i, spec in enumerate(rights):
-        r_ts = f"CAST({_q(spec.get('on', on))} AS {_sql_type(ts_type)})"
-        sel = [_q(c) if c in by
-               else f"{r_ts} AS {_q(c)}" if c == on
-               else f"{null(left.schema[c].dataType)} AS {_q(c)}"
+        r_ts = f"CAST({ident(spec.get('on', on))} AS {sql_type(ts_type)})"
+        sel = [ident(c) if c in by
+               else f"{r_ts} AS {ident(c)}" if c == on
+               else f"{null(left.schema[c].dataType)} AS {ident(c)}"
                for c in left_cols]
         sel += [f"0 AS {_SIDE}", f"{i} AS {_SRC}"]
         for oc, si, rc, dt in fill:
-            val = null(dt) if si != i else r_ts if rc is None else _q(rc)
-            sel.append(f"{val} AS {_q(oc)}")
+            val = null(dt) if si != i else r_ts if rc is None else ident(rc)
+            sel.append(f"{val} AS {ident(oc)}")
         u = u.unionByName(spec["df"].selectExpr(*sel))
 
     def pack(i: int) -> str:
-        fields = ", ".join(_q(oc) for oc, si, _, _ in fill if si == i)
-        return (f"CASE WHEN {_SRC} = {i} AND {_q(on)} IS NOT NULL "
+        fields = ", ".join(ident(oc) for oc, si, _, _ in fill if si == i)
+        return (f"CASE WHEN {_SRC} = {i} AND {ident(on)} IS NOT NULL "
                 f"THEN struct({fields}) END AS __pack{i}")
 
     u = u.selectExpr("*", *map(pack, range(len(rights))))
@@ -174,16 +176,16 @@ def asof_join_many(
         # probe rows sort BEFORE right rows at equal ts -> inclusive >=
         pick, side = "first", "DESC"
         frame = "CURRENT ROW AND UNBOUNDED FOLLOWING"
-    w = (f"PARTITION BY {', '.join(map(_q, by))} "
-         f"ORDER BY {_q(on)} ASC, {_SIDE} {side} ROWS BETWEEN {frame}")
+    w = (f"PARTITION BY {', '.join(map(ident, by))} "
+         f"ORDER BY {ident(on)} ASC, {_SIDE} {side} ROWS BETWEEN {frame}")
     filled = u.selectExpr(
-        *map(_q, left_cols), _SIDE,
+        *map(ident, left_cols), _SIDE,
         *[f"{pick}(__pack{i}, true) OVER ({w}) AS __pf{i}"
           for i in range(len(rights))])
 
     # each source's gate: a probe with a ts, and with ``tolerance`` a
     # matched ts close enough to it
-    gates = [f"{_q(on)} IS NOT NULL"] * len(rights)
+    gates = [f"{ident(on)} IS NOT NULL"] * len(rights)
     if tolerance is not None:
         oks = {}
         for i in range(len(rights)):
@@ -194,31 +196,9 @@ def asof_join_many(
         gates = list(oks)
     return (
         filled.where(f"{_SIDE} = 1")
-        .selectExpr(*map(_q, left_cols),
-                    *[f"CASE WHEN {gates[si]} THEN __pf{si}[{_lit(oc)}] END "
-                      f"AS {_q(oc)}"
+        .selectExpr(*map(ident, left_cols),
+                    *[f"CASE WHEN {gates[si]} THEN __pf{si}[{lit(oc)}] END "
+                      f"AS {ident(oc)}"
                       for oc, si, _, _ in fill if oc not in hidden])
     )
 
-
-def _q(name: str) -> str:
-    """``name`` as a quoted SQL identifier."""
-    return "`" + name.replace("`", "``") + "`"
-
-
-def _sql_type(dt: DataType) -> str:
-    """``dt`` in SQL type syntax, struct field names quoted."""
-    if isinstance(dt, StructType):
-        return "STRUCT<" + ", ".join(
-            f"{_q(f.name)}: {_sql_type(f.dataType)}" for f in dt) + ">"
-    if isinstance(dt, ArrayType):
-        return f"ARRAY<{_sql_type(dt.elementType)}>"
-    if isinstance(dt, MapType):
-        return (f"MAP<{_sql_type(dt.keyType)}, "
-                f"{_sql_type(dt.valueType)}>")
-    return dt.simpleString()
-
-
-def _lit(s: str) -> str:
-    """``s`` as a SQL string literal."""
-    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"

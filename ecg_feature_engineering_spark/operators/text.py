@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ecg_feature_engineering_spark.operators.sqltext import ident, lit
+
 # Tokenization contract: one EXPLICIT ASCII whitespace class, identical
 # bytes in Java regex (Spark split), RE2 (DuckDB oracles), and Python
 # re — bare \\s means a DIFFERENT set in each (Java \\s has \\x0B, RE2
@@ -54,32 +56,38 @@ def with_token_counts(df: DataFrame, text_col: str = "text") -> DataFrame:
 
 def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Quality-scoring signals: length, word count, mean word length,
-    punctuation ratio, stopword ratio, uppercase ratio, digit ratio.
-    All closed-form column expressions (oracle-parity safe)."""
-    t = F.col(text_col)
-    n_chars = F.length(t)
-    ws = words(t)
-    n_words = F.size(ws)
-    n_punct = n_chars - F.length(F.regexp_replace(t, r"[.,!?;:]", ""))
-    n_upper = n_chars - F.length(F.regexp_replace(t, r"[A-Z]", ""))
-    n_digit = n_chars - F.length(F.regexp_replace(t, r"[0-9]", ""))
-    n_stop = F.size(F.filter(ws, lambda x: x.isin(*STOPWORDS_EN)))
-    nz = lambda num, den: F.when(den > 0, num / den).otherwise(F.lit(0.0))  # noqa: E731
-    return df.withColumns({
-        "n_chars_q": n_chars.cast("long"),
-        "n_words": n_words.cast("long"),
+    punctuation ratio, stopword ratio, uppercase ratio, digit ratio,
+    appended to ``df``. All closed-form column expressions (oracle-parity
+    safe), sent as the SQL text of one ``selectExpr`` (operators/
+    sqltext.py); ``words`` is the tokenizer they spell."""
+    t = ident(text_col)
+    n_chars = f"length({t})"
+    ws = f"filter(split({t}, {lit(WS_PATTERN)}), w -> w != '')"
+
+    def n_removed(pattern: str) -> str:
+        return f"{n_chars} - length(regexp_replace({t}, {lit(pattern)}, ''))"
+
+    def nz(num: str, den: str) -> str:
+        return (f"CASE WHEN {den} > 0 THEN CAST({num} AS DOUBLE) / {den} "
+                f"ELSE 0D END")
+
+    stop = ", ".join(map(lit, STOPWORDS_EN))
+    cols = {
+        "n_chars_q": f"CAST({n_chars} AS BIGINT)",
+        "n_words": f"CAST(size({ws}) AS BIGINT)",
         # true mean token length (the old n_chars-(n_words-1) form
         # assumed exactly one separator char between words — wrong
         # for whitespace runs/padding, which the tokenizer collapses)
         "mean_word_len": nz(
-            F.aggregate(F.transform(ws, lambda x: F.length(x)),
-                        F.lit(0), lambda acc, v: acc + v)
-            .cast("double"), n_words),
-        "punct_ratio": nz(n_punct.cast("double"), n_chars),
-        "stopword_ratio": nz(n_stop.cast("double"), n_words),
-        "upper_ratio": nz(n_upper.cast("double"), n_chars),
-        "digit_ratio": nz(n_digit.cast("double"), n_chars),
-    })
+            f"aggregate(transform({ws}, x -> length(x)), 0, "
+            f"(acc, v) -> acc + v)", f"size({ws})"),
+        "punct_ratio": nz(n_removed("[.,!?;:]"), n_chars),
+        "stopword_ratio": nz(f"size(filter({ws}, x -> x IN ({stop})))",
+                             f"size({ws})"),
+        "upper_ratio": nz(n_removed("[A-Z]"), n_chars),
+        "digit_ratio": nz(n_removed("[0-9]"), n_chars),
+    }
+    return df.selectExpr("*", *[f"{e} AS {n}" for n, e in cols.items()])
 
 
 def langid_heuristic(df: DataFrame, text_col: str = "text",

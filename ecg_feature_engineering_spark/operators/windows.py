@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window, WindowSpec
 from pyspark.sql import functions as F
 
+from ecg_feature_engineering_spark.operators.sqltext import ident
+
 
 def epoch_seconds(df: DataFrame, col: str) -> Column:
     """Numeric seconds for a ts column of any flavor (timestamp,
@@ -27,15 +29,15 @@ def epoch_seconds(df: DataFrame, col: str) -> Column:
     the naive epoch via timestampdiff, so the result is identical on a
     cluster whose session tz isn't UTC (a tz-dependent
     cast-through-timestamp would silently shift absolute values there)."""
-    t = df.schema[col].dataType.simpleString()
-    c = F.col(col)
-    if t == "timestamp_ntz":
-        return F.expr(
-            f"timestampdiff(MICROSECOND, TIMESTAMP_NTZ '1970-01-01 "
-            f"00:00:00', `{col}`)") / F.lit(1e6)
-    if t.startswith("timestamp"):
-        return c.cast("double")
-    return c.cast("double")
+    return F.expr(_epoch_seconds_sql(df, col))
+
+
+def _epoch_seconds_sql(df: DataFrame, col: str) -> str:
+    """``epoch_seconds`` as SQL text."""
+    if df.schema[col].dataType.simpleString() == "timestamp_ntz":
+        return (f"timestampdiff(MICROSECOND, TIMESTAMP_NTZ '1970-01-01 "
+                f"00:00:00', {ident(col)}) / 1000000.0D")
+    return f"CAST({ident(col)} AS DOUBLE)"
 
 
 def ntz_epoch_seconds(col: Column | str) -> Column:
@@ -52,14 +54,28 @@ def entity_window(by="entity_id", order="ts") -> WindowSpec:
     return Window.partitionBy(*by).orderBy(*order)
 
 
+_RUNNING = " ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW"
+
+
+def _over(by="entity_id", order="ts", frame: str = "") -> str:
+    """``entity_window(by, order)``, plus an optional frame clause, as the
+    text of an OVER clause. A window column spelled as one ``F.expr`` or
+    ``selectExpr`` text is one py4j call; the same column chained through
+    ``F.*``/``Window`` calls is one per link (operators/sqltext.py)."""
+    by = [by] if isinstance(by, str) else list(by)
+    order = [order] if isinstance(order, str) else list(order)
+    return (f"OVER (PARTITION BY {', '.join(map(ident, by))} "
+            f"ORDER BY {', '.join(map(ident, order))}{frame})")
+
+
 def with_lag_diff(
     df: DataFrame, value: str = "value", by="entity_id", order="ts",
     n: int = 1, out: str | None = None,
 ) -> DataFrame:
     """x - lag(x, n) per entity — the RR = diff(rpeaks) core (W1)."""
-    w = entity_window(by, order)
-    return df.withColumn(out or f"{value}_diff{n}",
-                         F.col(value) - F.lag(value, n).over(w))
+    v = ident(value)
+    return df.withColumn(out or f"{value}_diff{n}", F.expr(
+        f"{v} - lag({v}, {int(n)}) {_over(by, order)}"))
 
 
 def with_lead_diff(df, value="value", by="entity_id", order="ts", n=1,
@@ -101,32 +117,28 @@ def sessionize(
     Reference analog: segmenting a record's beat stream into gap-free windows
     (SURVEY.md §2.5 sessionization).
     """
-    w = entity_window(by, order)
-    run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     ts_col = order[0] if isinstance(order, (list, tuple)) else order
-    sec = epoch_seconds(df, ts_col)
-    gap = sec - F.lag(sec).over(w)
-    flag = F.when(gap > F.lit(gap_seconds), 1).otherwise(0)
-    return df.withColumn(out, F.sum(flag).over(run).cast("long"))
+    sec = _epoch_seconds_sql(df, ts_col)
+    flag = (f"CASE WHEN {sec} - lag({sec}) {_over(by, order)} > "
+            f"{float(gap_seconds)!r}D THEN 1 ELSE 0 END")
+    return df.withColumn(out, F.expr(
+        f"CAST(sum({flag}) {_over(by, order, _RUNNING)} AS BIGINT)"))
 
 
 def rolling(
-    df: DataFrame, value: str, aggs: dict[str, Column | str],
+    df: DataFrame, value: str, aggs: dict[str, str],
     by="entity_id", order="ts", rows: int = 10,
 ) -> DataFrame:
     """Trailing rolling-window aggregates over the last ``rows`` rows
     (inclusive of current; frame ends at currentRow — leak-free).
 
-    ``aggs`` maps output name -> either an agg function name ("avg", "min",
-    "max", "sum", "stddev_pop", "count") applied to ``value``, or a prebuilt
-    Column to be windowed as-is.
+    ``aggs`` maps output name -> a SQL aggregate function name ("avg",
+    "min", "max", "sum", "stddev_pop", "count") applied to ``value``.
     """
-    w = entity_window(by, order).rowsBetween(-(rows - 1), Window.currentRow)
-    cols = []
-    for name, a in aggs.items():
-        expr = getattr(F, a)(value) if isinstance(a, str) else a
-        cols.append(expr.over(w).alias(name))
-    return df.select("*", *cols)
+    start = "CURRENT ROW" if rows == 1 else f"{int(rows) - 1} PRECEDING"
+    w = _over(by, order, f" ROWS BETWEEN {start} AND CURRENT ROW")
+    return df.selectExpr("*", *[f"{a}({ident(value)}) {w} AS {ident(name)}"
+                                for name, a in aggs.items()])
 
 
 def rolling_median3(df: DataFrame, value: str, by="entity_id", order="ts",

@@ -16,7 +16,6 @@ window → as-of → select, instead of a serial per-record loop.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ecg_feature_engineering_spark.datagen import images as datagen
 from ecg_feature_engineering_spark.functions import kernels
@@ -40,15 +39,12 @@ def image_features(images: DataFrame) -> DataFrame:
     decoded = (
         images.select("image_id", "entity_id", "ts", "phash", "caption",
                       feats_udf("bytes", "fmt", "phash").alias("__pf"))
-        .select("image_id", "entity_id", "ts", "phash", "caption", "__pf.*")
+        .selectExpr(
+            "image_id", "entity_id", "ts", "phash", "caption", "__pf.*",
+            "bit_count(phash) AS phash_bits",
+            "CAST(shiftrightunsigned(phash, 48) AS INT) AS phash_prefix")
     )
-    feats = quality_features(
-        decoded.withColumnRenamed("caption", "text"), "text"
-    ).withColumnRenamed("text", "caption")
-    return feats.withColumns({
-        "phash_bits": F.bit_count(F.col("phash")),
-        "phash_prefix": F.shiftrightunsigned(F.col("phash"), 48).cast("int"),
-    }).drop("caption")
+    return quality_features(decoded, "caption").drop("caption")
 
 
 def event_features(events: DataFrame, n_entities: int,
@@ -63,9 +59,9 @@ def event_features(events: DataFrame, n_entities: int,
     # order would make lag/rolling/session counts partition-order-
     # dependent on such collisions
     order = ["ts", "event_id"]
-    ev = events.withColumn(
-        "entity_id", F.format_string("ent%08d", F.pmod("user_id", F.lit(n_entities)))
-    ).select("entity_id", "ts", "event_id", "value")
+    ev = events.selectExpr(
+        f"format_string('ent%08d', pmod(user_id, {int(n_entities)})) "
+        "AS entity_id", "ts", "event_id", "value")
     ev = windows.with_lag_diff(ev, "value", "entity_id", order, 1,
                                "value_diff1")
     ev = windows.with_lag_diff(ev, "value", "entity_id", order, 2,
@@ -78,20 +74,19 @@ def event_features(events: DataFrame, n_entities: int,
     )
     ev = windows.sessionize(ev, session_gap_s, "entity_id", order,
                             "session_id")
-    from pyspark.sql import Window as _W
-    run = (
-        windows.entity_window(["entity_id", "session_id"], order)
-        .rowsBetween(_W.unboundedPreceding, _W.currentRow)
-    )
-    ev = ev.withColumn("session_event_n", F.count(F.lit(1)).over(run))
-    # this stream feeds an as-of RIGHT side, whose tie contract requires
-    # unique (entity, ts): keep the last event (max event_id) per tie —
-    # the entity's state as of that instant
-    return (ev.withColumn(
-        "__rn", F.row_number().over(
-            _W.partitionBy("entity_id", "ts")
-            .orderBy(F.col("event_id").desc())))
-        .where(F.col("__rn") == 1).drop("__rn", "event_id"))
+    # one projection: the per-session running count, and a row number
+    # per (entity, ts) tie for the dedup below. This stream feeds an as-of
+    # RIGHT side, whose tie contract requires unique (entity, ts): keep
+    # the last event (max event_id) per tie — the entity's state as of
+    # that instant
+    return ev.selectExpr(
+        "*",
+        "count(1) OVER (PARTITION BY entity_id, session_id "
+        "ORDER BY ts, event_id ROWS BETWEEN UNBOUNDED PRECEDING "
+        "AND CURRENT ROW) AS session_event_n",
+        "row_number() OVER (PARTITION BY entity_id, ts "
+        "ORDER BY event_id DESC) AS __rn",
+    ).where("__rn = 1").drop("__rn", "event_id")
 
 
 def assemble(img_feats: DataFrame, ev_feats: DataFrame,
